@@ -169,6 +169,7 @@ def _pair_jaccard(
     threshold: float,
     left: str = "doc_a",
     right: str = "doc_b",
+    right_shingles: DataFrame | None = None,
 ) -> DataFrame:
     """Exact Jaccard for EXACTLY the candidate pairs (r14): per-doc shingle
     ARRAYS + ``array_intersect`` instead of a shingle-level self-join.
@@ -190,16 +191,25 @@ def _pair_jaccard(
     the co-shingle superset), and per-doc arrays are bounded by document
     length — the occupancy/df guards upstream keep per-doc pair fan-out
     bounded exactly as before.
+
+    ``right_shingles`` gives the right side its own shingle table (the
+    vs-index probe: index postings on the right, the batch on the left).
+    Each side's arrays are then built from its own table, so a doc_id
+    present on both sides keeps that side's set, and no union of the two
+    streams exists. Such a union of a bucketed scan and a shuffled frame,
+    fed into sort-merge joins, hits Spark 4.1's union output-partitioning
+    propagation with AQE and broadcast off ("Can't zip RDDs with unequal
+    numbers of partitions").
     """
-    sets_ = shingles.groupBy("doc_id").agg(
-        F.collect_list("shingle").alias("_sh")
-    )
-    a = sets_.select(
-        F.col("doc_id").alias(left), F.col("_sh").alias("_sha")
-    )
-    b = sets_.select(
-        F.col("doc_id").alias(right), F.col("_sh").alias("_shb")
-    )
+
+    def _sets(frame: DataFrame, key: str, col: str) -> DataFrame:
+        return frame.groupBy(F.col("doc_id").alias(key)).agg(
+            F.collect_set("shingle").alias(col)
+        )
+
+    a = _sets(shingles, left, "_sha")
+    b = _sets(shingles if right_shingles is None else right_shingles,
+              right, "_shb")
     paired = pairs.join(a, left).join(b, right)
     # Intermediate projection pins ONE evaluation of the intersection
     # (CollapseProject does not inline non-cheap expressions consumed
@@ -211,7 +221,8 @@ def _pair_jaccard(
         F.size("_sha").alias("_na"),
         F.size("_shb").alias("_nb"),
     )
-    jacc = withn.select(
+    # `_ni > 0`: at threshold <= 0 a pair sharing no shingle would pass.
+    jacc = withn.filter(F.col("_ni") > 0).select(
         left,
         right,
         (
@@ -583,10 +594,8 @@ def minhash_lsh_pairs_vs_index(
         )
     )
     # Verification shingle sets: base side from the index (semi-joined to
-    # candidate base docs), delta side from this batch. Pair-driven
-    # verification (r14, _pair_jaccard) keys directly on
-    # (doc_new, doc_base) over the union of both sides' capped universes —
-    # the (lo, hi) normalization join of the _shingle_jaccard era is gone.
+    # candidate base docs), delta side from this batch, each passed to
+    # _pair_jaccard as its own frame (no union of the two; see there).
     base_cand = base_shingles.join(
         candidates.select(F.col("doc_base").alias("doc_id")).distinct(),
         "doc_id",
@@ -597,9 +606,9 @@ def minhash_lsh_pairs_vs_index(
         "doc_id",
         "left_semi",
     )
-    cand_shingles = base_cand.unionByName(delta_cand)
     return _pair_jaccard(
-        candidates, cand_shingles, threshold, left="doc_new", right="doc_base"
+        candidates, delta_cand, threshold, left="doc_new", right="doc_base",
+        right_shingles=base_cand,
     )
 
 

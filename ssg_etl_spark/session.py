@@ -6,9 +6,10 @@ of the configuration a 100 TB deployment wants: skew-join handling, Arrow
 for the Pandas-UDF paths, UTC session time, and pushdown left enabled so
 Catalyst prunes parquet scans.
 
-``spark.sql.shuffle.partitions`` defaults to the local core count for tests;
-on a real cluster it should be ~2-3x total executor cores (or left to AQE's
-coalescing with a high initial value).
+``spark.sql.shuffle.partitions`` is the ``shuffle_partitions`` argument, else
+``$SPARK_GRAFT_SHUFFLE``, else 32, whatever the core count (the test suite
+passes 8). On a real cluster it should be ~2-3x total executor cores (or
+left to AQE's coalescing with a high initial value).
 """
 
 from __future__ import annotations

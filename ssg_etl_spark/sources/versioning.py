@@ -158,6 +158,27 @@ def snapshot_meta(path: str, version: int) -> dict:
     return _read_manifest(path, version).get("meta", {})
 
 
+def last_batch_id(path: str) -> int:
+    """Replay watermark of a streaming sink: the highest micro-batch id
+    committed to ``path``, or -1 for an empty log.
+
+    Streaming commits record it as ``max_batch_id`` in their meta,
+    carried forward commit to commit (and through compaction), so one
+    manifest read decides. Structured-streaming batch ids are monotone
+    within a checkpoint lineage, so ``batch_id <= last_batch_id(path)``
+    means the batch was already committed. Logs written before the key
+    existed fall back to a scan of every version's ``batch_id``; their
+    next commit upgrades them."""
+    versions = snapshot_versions(path)
+    if not versions:
+        return -1
+    latest = snapshot_meta(path, versions[-1])
+    if "max_batch_id" in latest:
+        return int(latest["max_batch_id"])
+    bids = (snapshot_meta(path, v).get("batch_id") for v in versions)
+    return max((int(b) for b in bids if b is not None), default=-1)
+
+
 def snapshot_file_count(path: str, version: int | None = None) -> int:
     """Data-file count of a version (default latest) — the signal
     auto-compaction triggers on (one file accumulates per append
@@ -258,8 +279,8 @@ def compact_snapshots(
     evenly sized; a no-op (already ≤ the target layout) returns without
     committing. The source version's commit meta is CARRIED FORWARD into
     the compacted version (merged under the compaction keys): streaming
-    committers read their replay watermark (``max_batch_id``) from the
-    latest version's meta, and a compaction that dropped it would
+    committers read their replay watermark (:func:`last_batch_id`) from
+    the latest version's meta, and a compaction that dropped it would
     silently re-admit replayed batches. Returns ``{"compacted": bool,
     "version": committed-or-source version, "files_before": n,
     "files_after": m}``.

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from ssg_etl_spark.operators.merge import merge_upsert
 from ssg_etl_spark.operators.rollups import DEC
 from ssg_etl_spark.schemas import EVENTS
+from ssg_etl_spark.sources import versioning
 
 
 def events_file_stream(
@@ -518,49 +519,132 @@ def run_span_dedup_stream(
     q.awaitTermination()
 
 
+def _commit_batch(
+    df: DataFrame, path: str, batch_id: int, prev_max: int, mode: str
+) -> int:
+    """The one streaming commit: ``df`` lands as the next snapshot version
+    of ``path`` with ``{batch_id, max_batch_id}`` meta, the replay
+    watermark carried forward for :func:`versioning.last_batch_id`. The
+    append sinks call it only for ``batch_id > prev_max``; the state
+    folds commit overwrite snapshots through :func:`_fold_sink`."""
+    return versioning.commit_snapshot(
+        df,
+        path,
+        mode=mode,
+        meta={"batch_id": batch_id, "max_batch_id": max(batch_id, prev_max)},
+    )
+
+
+def _check_keep_versions(keep_versions: int | None) -> None:
+    if keep_versions is not None and keep_versions < 1:
+        raise ValueError("keep_versions must be >= 1")
+
+
+def _fold_sink(
+    path: str,
+    fold,
+    idempotent: bool,
+    keep_versions: int | None = None,
+    group_cols: list[str] | None = None,
+    max_groups: int | None = None,
+):
+    """The foreachBatch driver behind every sketch state fold (HLL,
+    bottom-k, grouped bottom-k, Bloom, histogram, CMS, log-bucket).
+
+    Per non-empty micro-batch: read the replay watermark, read the prior
+    state (None for an empty log), ``fold(batch, prior)`` into the merged
+    state, collect it, and commit it as ONE coalesced overwrite snapshot
+    (new data files, then an atomic manifest ``os.replace``: a crash
+    mid-write leaves the prior state readable and the replayed batch
+    re-folds into it). ``keep_versions=N`` then vacuums all but the last
+    N versions; every fold commits a fresh tiny state file, so a
+    minutes-cadence stream would otherwise keep one manifest and one
+    file per batch forever. The latest version carries the whole state
+    and the watermark, so retention limits only time-travel depth.
+
+    The replay policy follows the fold's merge algebra, not an option.
+    ``idempotent`` folds (MAX, OR, min-union) re-fold a replayed batch
+    to the identical state, so they never skip: a restart on a fresh
+    checkpoint, whose batch ids start at 0 again, keeps folding. SUM
+    folds would double-count, so a batch id at or below the watermark
+    commits nothing.
+
+    ``group_cols`` with ``max_groups`` bound the driver collect, which is
+    rows-per-group × |groups|: a high-cardinality group column
+    accumulating across batches would otherwise melt the driver
+    silently. A distributed distinct-count over the merged state runs
+    before the collect and raises with the measured cardinality.
+    """
+    _check_keep_versions(keep_versions)
+    if max_groups is not None and max_groups < 1:
+        raise ValueError("max_groups must be positive")
+
+    def apply(batch: DataFrame, batch_id: int) -> None:
+        if batch.isEmpty():
+            return
+        prev = versioning.last_batch_id(path)
+        if batch_id <= prev and not idempotent:
+            return
+        spark = batch.sparkSession
+        prior = (
+            versioning.read_snapshot(spark, path)
+            if versioning.snapshot_versions(path)
+            else None
+        )
+        merged = fold(batch, prior)
+        if not group_cols:
+            rows = merged.collect()
+        else:
+            # Persisted so the bound check and the collect share one
+            # computation.
+            merged = merged.persist()
+            try:
+                n_groups = merged.select(*group_cols).distinct().count()
+                if n_groups > max_groups:
+                    raise ValueError(
+                        f"fold state at {path} holds {n_groups} groups,"
+                        f" exceeding max_groups={max_groups}: every batch"
+                        " collects the whole state to the driver. Bucket"
+                        " the group column (e.g. domain instead of URL),"
+                        " or raise max_groups deliberately"
+                    )
+                rows = merged.collect()
+            finally:
+                merged.unpersist()
+        _commit_batch(
+            spark.createDataFrame(rows, merged.schema).coalesce(1),
+            path,
+            batch_id,
+            prev,
+            "overwrite",
+        )
+        if keep_versions is not None:
+            versioning.vacuum_snapshots(path, keep_last=keep_versions)
+
+    return apply
+
+
 def foreach_batch_snapshot_commit(snapshot_path: str):
     """Streaming corpus versioning: every micro-batch lands as ONE new
     snapshot version (``versioning.commit_snapshot`` append), so each
     training run can pin "the corpus as of version N" while ingestion
     keeps flowing — the continuous form of the batch commit.
 
-    Replay safety: every commit's meta carries ``max_batch_id`` — the
-    high-water micro-batch id over the whole log, carried forward commit
-    to commit — so a replayed batch (crash between the commit and the
-    checkpoint write) is detected by reading ONLY the newest manifest:
-    structured-streaming batch ids are monotone within a checkpoint
-    lineage, so ``batch_id <= max_batch_id`` ⇔ already committed. A
-    long-lived stream therefore pays O(1) manifest reads per batch, not
-    O(versions) (which compounded to O(V²) over the stream's life). Logs
-    written before the watermark existed fall back to the one-time full
-    meta scan and are upgraded by their next commit. Contract: one
-    committer per (checkpoint, snapshot path) lineage — same as the
-    underlying single-writer manifest log.
+    Replay safety: appends are not idempotent, so a batch id at or below
+    ``versioning.last_batch_id`` (a crash between the commit and the
+    checkpoint write) commits nothing. The watermark is read from the
+    newest manifest alone, so a long-lived stream pays O(1) manifest
+    reads per batch, not O(versions) (which compounded to O(V²) over the
+    stream's life). Contract: one committer per (checkpoint, snapshot
+    path) lineage — same as the underlying single-writer manifest log.
     """
-    from ssg_etl_spark.sources import versioning
 
     def apply(batch: DataFrame, batch_id: int) -> None:
         if batch.isEmpty():
             return
-        prev_max = -1
-        versions = versioning.snapshot_versions(snapshot_path)
-        if versions:
-            latest = versioning.snapshot_meta(snapshot_path, versions[-1])
-            if "max_batch_id" in latest:
-                prev_max = int(latest["max_batch_id"])
-            else:
-                for v in versions:
-                    bid = versioning.snapshot_meta(snapshot_path, v).get("batch_id")
-                    if bid is not None:
-                        prev_max = max(prev_max, int(bid))
-            if batch_id <= prev_max:
-                return
-        versioning.commit_snapshot(
-            batch,
-            snapshot_path,
-            mode="append",
-            meta={"batch_id": batch_id, "max_batch_id": max(batch_id, prev_max)},
-        )
+        prev = versioning.last_batch_id(snapshot_path)
+        if batch_id > prev:
+            _commit_batch(batch, snapshot_path, batch_id, prev, "append")
 
     return apply
 
@@ -603,82 +687,32 @@ def foreach_batch_hll_merge(
     fold into a persisted register table by register-wise MAX
     (operators/sketches.py). MAX-merging is IDEMPOTENT, so a replayed
     micro-batch (restart between write and checkpoint commit) leaves the
-    sketch unchanged — this sink is exactly-once by algebra, with no
-    batch-id bookkeeping. State is ≤ 256 rows per group forever; the
-    stream never re-reads its own history.
+    sketch unchanged — this sink is exactly-once by algebra and never
+    skips a batch id. State is ≤ 256 rows per group forever; the stream
+    never re-reads its own history.
 
-    State durability: the merged registers publish through
-    ``commit_snapshot`` (write new data files, then atomic manifest
-    ``os.replace``) — a crash mid-write leaves the previous register
-    version fully readable, and the replayed micro-batch re-merges into it
-    idempotently. The r7 form overwrote ``registers_path`` in place, so a
-    crash between delete and rewrite destroyed ALL accumulated state and
-    the replay silently rebuilt the sketch from that one batch — the
-    "exactly-once by algebra" claim only ever covered replays, not a
-    non-atomic state rewrite (r7 advisor finding).
-
-    ``keep_versions=N`` (r9): retention inline — after each commit,
-    vacuum all but the last N versions. Every fold commits a fresh tiny
-    state file, so a minutes-cadence stream otherwise accumulates one
-    manifest + one file per batch forever; the latest version carries the
-    whole state (and, for the SUM folds, the replay watermark), so
-    vacuuming history never affects correctness — only time travel depth.
+    Commit, retention (``keep_versions``) and the ``max_groups`` bound on
+    the per-batch registers×|groups| driver collect are the shared
+    :func:`_fold_sink` driver's. Its atomic snapshot commit is what makes
+    the algebra enough: an in-place overwrite of ``registers_path``
+    would let a crash between delete and rewrite destroy ALL accumulated
+    state, and the replay would silently rebuild the sketch from that
+    one batch.
     """
     from ssg_etl_spark.operators.sketches import hll_merge, hll_registers
-    from ssg_etl_spark.sources.versioning import (
-        commit_snapshot,
-        read_snapshot,
-        snapshot_versions,
-        vacuum_snapshots,
-    )
 
-    if keep_versions is not None and keep_versions < 1:
-        raise ValueError("keep_versions must be >= 1")
-    if max_groups < 1:
-        raise ValueError("max_groups must be positive")
-
-    def apply(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        spark = batch.sparkSession
+    def fold(batch: DataFrame, prior: DataFrame | None) -> DataFrame:
         fresh = hll_registers(batch, group_cols, value_col)
-        if snapshot_versions(registers_path):
-            prior = read_snapshot(spark, registers_path)
-            merged = hll_merge([prior, fresh], group_cols)
-        else:
-            merged = fresh
-        # Registers are group-bounded tiny per group (<= 256 rows), but
-        # the driver collect below is registers*|groups|: a
-        # high-cardinality group column accumulating across batches
-        # would melt the driver silently. Same max_groups
-        # raise-don't-melt guard as the grouped bottom-k fold (r11
-        # verdict); persist so the bound check and the collect share
-        # one computation.
-        merged = merged.persist()
-        try:
-            if group_cols:
-                n_groups = merged.select(*group_cols).distinct().count()
-                if n_groups > max_groups:
-                    raise ValueError(
-                        f"HLL fold state holds {n_groups} groups,"
-                        f" exceeding max_groups={max_groups}: the"
-                        " per-batch driver collect is registers*|groups|"
-                        " rows. Bucket the group column, or raise"
-                        " max_groups deliberately"
-                    )
-            rows = merged.collect()
-        finally:
-            merged.unpersist()
-        commit_snapshot(
-            spark.createDataFrame(rows, merged.schema).coalesce(1),
-            registers_path,
-            mode="overwrite",
-            meta={"batch_id": batch_id},
-        )
-        if keep_versions is not None:
-            vacuum_snapshots(registers_path, keep_last=keep_versions)
+        return fresh if prior is None else hll_merge([prior, fresh], group_cols)
 
-    return apply
+    return _fold_sink(
+        registers_path,
+        fold,
+        idempotent=True,
+        keep_versions=keep_versions,
+        group_cols=group_cols,
+        max_groups=max_groups,
+    )
 
 
 def foreach_batch_bottomk_merge(
@@ -692,48 +726,23 @@ def foreach_batch_bottomk_merge(
     (operators/sketches.bottomk_merge). Min-union is IDEMPOTENT — a
     replayed micro-batch re-merges to the identical state — so, like the
     HLL/Bloom folds and unlike the SUM folds, this sink is exactly-once
-    by algebra with no batch-id bookkeeping. The persisted state is the
+    by algebra and never skips a batch id. The persisted state is the
     stream-lifetime STABLE DISTINCT-KEY SAMPLE (membership only ever
     shrinks as smaller hashes arrive) plus the KMV cardinality input —
-    state <= k rows forever. Same atomic snapshot-commit durability and
-    optional inline retention as the other folds."""
+    state <= k rows forever. Commit and retention: :func:`_fold_sink`."""
     from ssg_etl_spark.operators.sketches import (
         BOTTOMK_K,
         bottomk_merge,
         bottomk_sketch,
     )
-    from ssg_etl_spark.sources.versioning import (
-        commit_snapshot,
-        read_snapshot,
-        snapshot_versions,
-        vacuum_snapshots,
-    )
 
     k = BOTTOMK_K if k is None else k
-    if keep_versions is not None and keep_versions < 1:
-        raise ValueError("keep_versions must be >= 1")
 
-    def apply(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        spark = batch.sparkSession
+    def fold(batch: DataFrame, prior: DataFrame | None) -> DataFrame:
         fresh = bottomk_sketch(batch, key_col, k=k)
-        if snapshot_versions(sketch_path):
-            prior = read_snapshot(spark, sketch_path)
-            merged = bottomk_merge([prior, fresh], k=k)
-        else:
-            merged = fresh
-        rows = merged.collect()
-        commit_snapshot(
-            spark.createDataFrame(rows, merged.schema).coalesce(1),
-            sketch_path,
-            mode="overwrite",
-            meta={"batch_id": batch_id},
-        )
-        if keep_versions is not None:
-            vacuum_snapshots(sketch_path, keep_last=keep_versions)
+        return fresh if prior is None else bottomk_merge([prior, fresh], k=k)
 
-    return apply
+    return _fold_sink(sketch_path, fold, idempotent=True, keep_versions=keep_versions)
 
 
 def foreach_batch_bottomk_merge_grouped(
@@ -749,86 +758,49 @@ def foreach_batch_bottomk_merge_grouped(
     bottom-k (operators/sketches.bottomk_sketch_grouped) min-unions into
     a persisted grouped sketch table via ``bottomk_merge_grouped``.
     Idempotent by the same algebra (per-group dedup + re-rank), so
-    replays are exactly-once with no batch-id bookkeeping; state is
-    ≤ k rows PER GROUP forever. This is the maintenance side of the
-    overlap machinery: the persisted table feeds
-    ``kmv_set_estimates_grouped`` / ``kmv_overlap_matrix`` directly, so
-    a live stream keeps per-source distinct samples whose cross-source
-    overlap matrix is one query at any time — no corpus rescan ever.
+    replays are exactly-once and never skipped; state is ≤ k rows PER
+    GROUP forever. This is the maintenance side of the overlap
+    machinery: the persisted table feeds ``kmv_set_estimates_grouped`` /
+    ``kmv_overlap_matrix`` directly, so a live stream keeps per-source
+    distinct samples whose cross-source overlap matrix is one query at
+    any time — no corpus rescan ever.
 
     ``max_groups`` ENFORCES the k×|groups| driver-collect bound in code
-    (r11 verdict: the same raise-don't-melt discipline as
-    ``kmv_overlap_matrix``'s max_sources and SemDeDup's
-    max_cluster_size): per micro-batch the fold collects the merged
-    grouped sketch to the driver, so a caller passing a
-    high-cardinality group column (per-URL instead of per-domain)
-    would melt the driver silently as groups accumulate across
-    batches. One distinct-count over the (persisted) merged sketch
-    table runs BEFORE the collect and raises with the measured
-    cardinality; at the default 10 000 groups × k=256 the collect is
-    ≤ ~2.6M sketch rows — deliberate territory. Raise the bound
-    consciously, or bucket the group column first."""
+    (the same raise-don't-melt discipline as ``kmv_overlap_matrix``'s
+    max_sources and SemDeDup's max_cluster_size; the check is
+    :func:`_fold_sink`'s): a caller passing a high-cardinality group
+    column (per-URL instead of per-domain) gets an error with the
+    measured cardinality, not a melted driver. At the default 10 000
+    groups × k=256 the collect is ≤ ~2.6M sketch rows — deliberate
+    territory. Raise the bound consciously, or bucket the group column
+    first."""
     from ssg_etl_spark.operators.sketches import (
         BOTTOMK_K,
         bottomk_merge_grouped,
         bottomk_sketch_grouped,
     )
-    from ssg_etl_spark.sources.versioning import (
-        commit_snapshot,
-        read_snapshot,
-        snapshot_versions,
-        vacuum_snapshots,
-    )
 
     k = BOTTOMK_K if k is None else k
-    if keep_versions is not None and keep_versions < 1:
-        raise ValueError("keep_versions must be >= 1")
-    if max_groups < 1:
-        raise ValueError("max_groups must be positive")
     if not group_cols:
         raise ValueError(
             "group_cols must be non-empty (use foreach_batch_bottomk_merge"
             " for the global sketch)"
         )
 
-    def apply(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        spark = batch.sparkSession
+    def fold(batch: DataFrame, prior: DataFrame | None) -> DataFrame:
         fresh = bottomk_sketch_grouped(batch, key_col, group_cols, k=k)
-        if snapshot_versions(sketch_path):
-            prior = read_snapshot(spark, sketch_path)
-            merged = bottomk_merge_grouped([prior, fresh], group_cols, k=k)
-        else:
-            merged = fresh
-        # Persist so the bound check and the collect share one
-        # computation; the distinct-count runs DISTRIBUTED and fires
-        # before any driver materialization (raise-don't-melt).
-        merged = merged.persist()
-        try:
-            n_groups = merged.select(*group_cols).distinct().count()
-            if n_groups > max_groups:
-                raise ValueError(
-                    f"grouped bottom-k fold state holds {n_groups} groups,"
-                    f" exceeding max_groups={max_groups}: the per-batch"
-                    f" driver collect is k*|groups| ~="
-                    f" {n_groups * k} sketch rows. Bucket the group"
-                    " column (e.g. domain instead of URL), or raise"
-                    " max_groups deliberately"
-                )
-            rows = merged.collect()
-        finally:
-            merged.unpersist()
-        commit_snapshot(
-            spark.createDataFrame(rows, merged.schema).coalesce(1),
-            sketch_path,
-            mode="overwrite",
-            meta={"batch_id": batch_id},
-        )
-        if keep_versions is not None:
-            vacuum_snapshots(sketch_path, keep_last=keep_versions)
+        if prior is None:
+            return fresh
+        return bottomk_merge_grouped([prior, fresh], group_cols, k=k)
 
-    return apply
+    return _fold_sink(
+        sketch_path,
+        fold,
+        idempotent=True,
+        keep_versions=keep_versions,
+        group_cols=group_cols,
+        max_groups=max_groups,
+    )
 
 
 def run_hll_stream(
@@ -874,40 +846,15 @@ def foreach_batch_bloom_merge(
     and the state publishes through atomic snapshot commits, so a crash
     mid-write can never destroy accumulated bits. State is ≤ n_bits/32
     word rows forever; probing "have we ever seen this key?" needs only
-    the latest snapshot, never the stream's history. ``keep_versions``:
-    inline retention, as in ``foreach_batch_hll_merge``."""
+    the latest snapshot, never the stream's history. Commit and
+    ``keep_versions`` retention: :func:`_fold_sink`."""
     from ssg_etl_spark.operators.bloom import bloom_build, bloom_merge
-    from ssg_etl_spark.sources.versioning import (
-        commit_snapshot,
-        read_snapshot,
-        snapshot_versions,
-        vacuum_snapshots,
-    )
 
-    if keep_versions is not None and keep_versions < 1:
-        raise ValueError("keep_versions must be >= 1")
-
-    def apply(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        spark = batch.sparkSession
+    def fold(batch: DataFrame, prior: DataFrame | None) -> DataFrame:
         fresh = bloom_build(batch, key_col, n_bits=n_bits, k=k)
-        if snapshot_versions(bloom_path):
-            prior = read_snapshot(spark, bloom_path)
-            merged = bloom_merge([prior, fresh])
-        else:
-            merged = fresh
-        rows = merged.collect()
-        commit_snapshot(
-            spark.createDataFrame(rows, merged.schema).coalesce(1),
-            bloom_path,
-            mode="overwrite",
-            meta={"batch_id": batch_id},
-        )
-        if keep_versions is not None:
-            vacuum_snapshots(bloom_path, keep_last=keep_versions)
+        return fresh if prior is None else bloom_merge([prior, fresh])
 
-    return apply
+    return _fold_sink(bloom_path, fold, idempotent=True, keep_versions=keep_versions)
 
 
 def foreach_batch_hist_merge(
@@ -925,42 +872,22 @@ def foreach_batch_hist_merge(
 
     Contrast with the HLL (MAX) and Bloom (OR) folds: SUM is mergeable
     but NOT idempotent, so replay safety cannot come from algebra — it
-    comes from the manifest's ``max_batch_id`` watermark (the
-    snapshot-commit pattern): a replayed micro-batch is detected from
-    the newest manifest alone and skipped, and the atomic snapshot
-    commit keeps prior state readable through a crash. The bin range
-    must be FIXED up front ([lo, hi), out-of-range values clamp into
-    the edge bins) — per-batch min/max would mis-align bins across
-    batches and make the counts meaningless to add.
+    comes from the replay watermark (``versioning.last_batch_id``): a
+    replayed micro-batch is detected from the newest manifest alone and
+    skipped by :func:`_fold_sink`, and the atomic snapshot commit keeps
+    prior state readable through a crash. The bin range must be FIXED up
+    front ([lo, hi), out-of-range values clamp into the edge bins) —
+    per-batch min/max would mis-align bins across batches and make the
+    counts meaningless to add.
     """
     if hi <= lo:
         raise ValueError("hi must be greater than lo")
     if n_bins < 1:
         raise ValueError("n_bins must be positive")
-    if keep_versions is not None and keep_versions < 1:
-        raise ValueError("keep_versions must be >= 1")
-    from ssg_etl_spark.sources.versioning import (
-        commit_snapshot,
-        read_snapshot,
-        snapshot_meta,
-        snapshot_versions,
-        vacuum_snapshots,
-    )
 
     width = (hi - lo) / n_bins
 
-    def apply(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        spark = batch.sparkSession
-        prev_max = -1
-        versions = snapshot_versions(hist_path)
-        if versions:
-            prev_max = int(
-                snapshot_meta(hist_path, versions[-1]).get("max_batch_id", -1)
-            )
-            if batch_id <= prev_max:
-                return  # replay of an already-folded batch: SUM must skip
+    def fold(batch: DataFrame, prior: DataFrame | None) -> DataFrame:
         v = F.col(value_col).cast("double")
         fresh = (
             batch.filter(v.isNotNull())
@@ -976,26 +903,11 @@ def foreach_batch_hist_merge(
             .groupBy("bin")
             .agg(F.count(F.lit(1)).alias("n"))
         )
-        if versions:
-            prior = read_snapshot(spark, hist_path)
-            merged = (
-                prior.unionByName(fresh)
-                .groupBy("bin")
-                .agg(F.sum("n").alias("n"))
-            )
-        else:
-            merged = fresh
-        rows = merged.collect()
-        commit_snapshot(
-            spark.createDataFrame(rows, merged.schema).coalesce(1),
-            hist_path,
-            mode="overwrite",
-            meta={"batch_id": batch_id, "max_batch_id": max(batch_id, prev_max)},
-        )
-        if keep_versions is not None:
-            vacuum_snapshots(hist_path, keep_last=keep_versions)
+        if prior is None:
+            return fresh
+        return prior.unionByName(fresh).groupBy("bin").agg(F.sum("n").alias("n"))
 
-    return apply
+    return _fold_sink(hist_path, fold, idempotent=False, keep_versions=keep_versions)
 
 
 def foreach_batch_cms_merge(
@@ -1005,55 +917,20 @@ def foreach_batch_cms_merge(
     into a persisted sketch (operators/sketches.cms_sketch) through
     atomic snapshot commits. Like the histogram fold — and unlike the
     HLL/Bloom folds — SUM is not replay-idempotent, so exactly-once
-    comes from the manifest's ``max_batch_id`` watermark. State is
-    ≤ depth × width = 1024 cells forever; ``cms_lookup`` probes the
-    latest snapshot for any key's frequency over the stream's whole
+    comes from the replay watermark (``versioning.last_batch_id``).
+    State is ≤ depth × width = 1024 cells forever; ``cms_lookup`` probes
+    the latest snapshot for any key's frequency over the stream's whole
     history. This completes the streaming-fold family: HLL (MAX,
     idempotent), Bloom (OR, idempotent), histogram and CMS (SUM,
-    batch-id-guarded). ``keep_versions``: inline retention, as in
-    ``foreach_batch_hll_merge`` — safe because the replay watermark rides
-    the LATEST manifest, which vacuum always keeps."""
+    batch-id-guarded). Commit and ``keep_versions`` retention:
+    :func:`_fold_sink`."""
     from ssg_etl_spark.operators.sketches import cms_merge, cms_sketch
-    from ssg_etl_spark.sources.versioning import (
-        commit_snapshot,
-        read_snapshot,
-        snapshot_meta,
-        snapshot_versions,
-        vacuum_snapshots,
-    )
 
-    if keep_versions is not None and keep_versions < 1:
-        raise ValueError("keep_versions must be >= 1")
-
-    def apply(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        spark = batch.sparkSession
-        prev_max = -1
-        versions = snapshot_versions(sketch_path)
-        if versions:
-            prev_max = int(
-                snapshot_meta(sketch_path, versions[-1]).get("max_batch_id", -1)
-            )
-            if batch_id <= prev_max:
-                return  # replayed micro-batch: adding again would double-count
+    def fold(batch: DataFrame, prior: DataFrame | None) -> DataFrame:
         fresh = cms_sketch(batch, [], value_col)
-        if versions:
-            prior = read_snapshot(spark, sketch_path)
-            merged = cms_merge([prior, fresh], [])
-        else:
-            merged = fresh
-        rows = merged.collect()
-        commit_snapshot(
-            spark.createDataFrame(rows, merged.schema).coalesce(1),
-            sketch_path,
-            mode="overwrite",
-            meta={"batch_id": batch_id, "max_batch_id": max(batch_id, prev_max)},
-        )
-        if keep_versions is not None:
-            vacuum_snapshots(sketch_path, keep_last=keep_versions)
+        return fresh if prior is None else cms_merge([prior, fresh], [])
 
-    return apply
+    return _fold_sink(sketch_path, fold, idempotent=False, keep_versions=keep_versions)
 
 
 def foreach_batch_logbucket_merge(
@@ -1075,57 +952,23 @@ def foreach_batch_logbucket_merge(
     out-of-range fat-finger clamps into an edge bin forever — log buckets
     align by construction across batches, so there is nothing to
     configure and nothing an outlier can distort. Like the other SUM
-    folds (histogram, CMS), replay safety comes from the manifest's
-    ``max_batch_id`` watermark, not algebra. State is bounded by occupied
-    buckets (~hundreds; capped by the value range's decades), never by
-    stream length. ``keep_versions``: inline retention, safe because the
-    watermark rides the LATEST manifest, which vacuum always keeps.
+    folds (histogram, CMS), replay safety comes from the replay
+    watermark (``versioning.last_batch_id``), not algebra. State is
+    bounded by occupied buckets (~hundreds; capped by the value range's
+    decades), never by stream length. Commit and ``keep_versions``
+    retention: :func:`_fold_sink`.
     ``weight_col``: optional positive row weights (token counts) — the
     weighted sketch's bucket table has the identical (blo, bhi, cnt)
     schema and the identical SUM-merge algebra, so the fold, the replay
     watermark, and the quantile read are unchanged; the stream then
     maintains token-mass percentiles instead of row percentiles."""
     from ssg_etl_spark.operators.sketches import logbucket_merge, logbucket_sketch
-    from ssg_etl_spark.sources.versioning import (
-        commit_snapshot,
-        read_snapshot,
-        snapshot_meta,
-        snapshot_versions,
-        vacuum_snapshots,
-    )
 
-    if keep_versions is not None and keep_versions < 1:
-        raise ValueError("keep_versions must be >= 1")
-
-    def apply(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        spark = batch.sparkSession
-        prev_max = -1
-        versions = snapshot_versions(sketch_path)
-        if versions:
-            prev_max = int(
-                snapshot_meta(sketch_path, versions[-1]).get("max_batch_id", -1)
-            )
-            if batch_id <= prev_max:
-                return  # replayed micro-batch: adding again would double-count
+    def fold(batch: DataFrame, prior: DataFrame | None) -> DataFrame:
         fresh = logbucket_sketch(batch, value_col, weight_col=weight_col)
-        if versions:
-            prior = read_snapshot(spark, sketch_path)
-            merged = logbucket_merge([prior, fresh])
-        else:
-            merged = fresh
-        rows = merged.collect()
-        commit_snapshot(
-            spark.createDataFrame(rows, merged.schema).coalesce(1),
-            sketch_path,
-            mode="overwrite",
-            meta={"batch_id": batch_id, "max_batch_id": max(batch_id, prev_max)},
-        )
-        if keep_versions is not None:
-            vacuum_snapshots(sketch_path, keep_last=keep_versions)
+        return fresh if prior is None else logbucket_merge([prior, fresh])
 
-    return apply
+    return _fold_sink(sketch_path, fold, idempotent=False, keep_versions=keep_versions)
 
 
 def foreach_batch_quality_gate(
@@ -1145,11 +988,11 @@ def foreach_batch_quality_gate(
     the pipeline instead — at 100 TB/day a poison row must not halt
     ingestion).
 
-    Both sinks are append-mode snapshot commits guarded by the manifest
-    ``max_batch_id`` watermark (appends are not idempotent), so a
-    replayed micro-batch re-lands in NEITHER table. Rule predicates must
-    be deterministic row functions — the same rows quarantine on every
-    engine and replay.
+    Both sinks are append-mode snapshot commits, each guarded by its own
+    replay watermark (``versioning.last_batch_id``; appends are not
+    idempotent), so a replayed micro-batch re-lands in NEITHER table.
+    Rule predicates must be deterministic row functions — the same rows
+    quarantine on every engine and replay.
 
     ``compact_every=N`` (r9): whenever the target's latest version
     accumulates ≥ N data files (appends add one coalesced file per
@@ -1163,26 +1006,10 @@ def foreach_batch_quality_gate(
         raise ValueError("row_rules must be non-empty")
     if compact_every is not None and compact_every < 2:
         raise ValueError("compact_every must be >= 2")
-    from ssg_etl_spark.sources.versioning import (
-        commit_snapshot,
-        compact_snapshots,
-        snapshot_file_count,
-        snapshot_meta,
-        snapshot_versions,
-    )
 
     def apply(batch: DataFrame, batch_id: int) -> None:
         if batch.isEmpty():
             return
-        # One watermark decides both sinks: the target's (committed last —
-        # see below — so a crash between the two commits replays into an
-        # idempotent pair: quarantine is re-checked against ITS watermark).
-        def _max_bid(path: str) -> int:
-            versions = snapshot_versions(path)
-            if not versions:
-                return -1
-            return int(snapshot_meta(path, versions[-1]).get("max_batch_id", -1))
-
         flags = []
         for name, rule in row_rules.items():
             passed = F.expr(rule) if isinstance(rule, str) else rule
@@ -1199,27 +1026,20 @@ def foreach_batch_quality_gate(
         bad = checked.filter(F.size("failed_rules") > 0)
         good = checked.filter(F.size("failed_rules") == 0).drop("failed_rules")
 
-        q_prev = _max_bid(quarantine_path)
+        # Each sink keeps its own watermark, and the target commits LAST:
+        # a crash between the two commits replays into an idempotent pair
+        # (the quarantine is re-checked against ITS watermark).
+        q_prev = versioning.last_batch_id(quarantine_path)
         if batch_id > q_prev and not bad.isEmpty():
-            commit_snapshot(
-                bad,
-                quarantine_path,
-                mode="append",
-                meta={"batch_id": batch_id, "max_batch_id": max(batch_id, q_prev)},
-            )
-        t_prev = _max_bid(target_path)
+            _commit_batch(bad, quarantine_path, batch_id, q_prev, "append")
+        t_prev = versioning.last_batch_id(target_path)
         if batch_id > t_prev and not good.isEmpty():
-            commit_snapshot(
-                good,
-                target_path,
-                mode="append",
-                meta={"batch_id": batch_id, "max_batch_id": max(batch_id, t_prev)},
-            )
+            _commit_batch(good, target_path, batch_id, t_prev, "append")
             if (
                 compact_every is not None
-                and snapshot_file_count(target_path) >= compact_every
+                and versioning.snapshot_file_count(target_path) >= compact_every
             ):
-                compact_snapshots(
+                versioning.compact_snapshots(
                     batch.sparkSession, target_path, target_file_bytes
                 )
 
@@ -1249,9 +1069,9 @@ def foreach_batch_ge_checkpoint_gate(
     operator, not halt ingestion (the reference's checkpoint raises and
     stops the DAG instead).
 
-    All three sinks are watermark-guarded snapshot appends (manifest
-    ``max_batch_id``), so a replayed micro-batch re-lands in none of
-    them. The checkpoint's data-asset binding is the stream itself; a
+    All three sinks are watermark-guarded snapshot appends
+    (``versioning.last_batch_id``), so a replayed micro-batch re-lands
+    in none of them. The checkpoint's data-asset binding is the stream itself; a
     checkpoint with zero validations raises at closure-build time.
     ``compact_every``/``target_file_bytes`` pass through to the target's
     inline compaction.
@@ -1271,11 +1091,6 @@ def foreach_batch_ge_checkpoint_gate(
         ge_suite_split_row_rules,
         load_ge_checkpoint_file,
         run_suite,
-    )
-    from ssg_etl_spark.sources.versioning import (
-        commit_snapshot,
-        snapshot_meta,
-        snapshot_versions,
     )
 
     cp = load_ge_checkpoint_file(checkpoint_path)
@@ -1298,18 +1113,12 @@ def foreach_batch_ge_checkpoint_gate(
         target_file_bytes=target_file_bytes,
     )
 
-    def _max_bid(path: str) -> int:
-        versions = snapshot_versions(path)
-        if not versions:
-            return -1
-        return int(snapshot_meta(path, versions[-1]).get("max_batch_id", -1))
-
     def apply(batch: DataFrame, batch_id: int) -> None:
         if batch.isEmpty():
             return
         gate(batch, batch_id)
         if audit_path is not None:
-            a_prev = _max_bid(audit_path)
+            a_prev = versioning.last_batch_id(audit_path)
             if batch_id > a_prev:
                 rows = []
                 for suite_name, exps in batch_suites:
@@ -1331,15 +1140,7 @@ def foreach_batch_ge_checkpoint_gate(
                     "checkpoint string, suite string, expectation string, "
                     "passed boolean, metrics string, batch_id long",
                 )
-                commit_snapshot(
-                    audit,
-                    audit_path,
-                    mode="append",
-                    meta={
-                        "batch_id": batch_id,
-                        "max_batch_id": max(batch_id, a_prev),
-                    },
-                )
+                _commit_batch(audit, audit_path, batch_id, a_prev, "append")
 
     return apply
 
@@ -1363,8 +1164,8 @@ def foreach_batch_ivf_append(
     an offline batch job; retrain + reassign periodically as drift
     accumulates, which is a full rebuild by design).
 
-    Replay safety: appends are not idempotent, so this fold rides the
-    manifest ``max_batch_id`` watermark exactly like
+    Replay safety: appends are not idempotent, so this sink rides the
+    replay watermark (``versioning.last_batch_id``) exactly like
     :func:`foreach_batch_snapshot_commit` — a replayed micro-batch is
     detected from the newest manifest alone and skipped.
     ``keep_versions``: inline retention; the latest version carries the
@@ -1384,33 +1185,22 @@ def foreach_batch_ivf_append(
     inline compaction for deployments that schedule OPTIMIZE
     externally."""
     from ssg_etl_spark.operators.similarity import ivf_assign
-    from ssg_etl_spark.sources import versioning
 
-    if keep_versions is not None and keep_versions < 1:
-        raise ValueError("keep_versions must be >= 1")
+    _check_keep_versions(keep_versions)
     if compact_every is not None and compact_every < 1:
         raise ValueError("compact_every must be >= 1")
 
     def apply(batch: DataFrame, batch_id: int) -> None:
         if batch.isEmpty():
             return
+        prev = versioning.last_batch_id(cells_path)
+        if batch_id <= prev:
+            return
         spark = batch.sparkSession
-        prev_max = -1
-        versions = versioning.snapshot_versions(cells_path)
-        if versions:
-            latest = versioning.snapshot_meta(cells_path, versions[-1])
-            prev_max = int(latest.get("max_batch_id", -1))
-            if batch_id <= prev_max:
-                return
         cents = spark.read.parquet(centroids_path)
-        version = versioning.commit_snapshot(
-            ivf_assign(cents, batch).coalesce(1),
-            cells_path,
-            mode="append",
-            meta={
-                "batch_id": batch_id,
-                "max_batch_id": max(batch_id, prev_max),
-            },
+        version = _commit_batch(
+            ivf_assign(cents, batch).coalesce(1), cells_path, batch_id, prev,
+            "append",
         )
         if compact_every is not None and version % compact_every == 0:
             versioning.compact_snapshots(

@@ -589,3 +589,171 @@ def test_mp4_header_scan_roundtrips_container_fields(w, h, dur, ts, audio):
     assert m["duration_ms"] == dur * 1000 // ts
     assert m["n_tracks"] == (2 if audio else 1)
     assert m["audio_codec"] == ("mp4a" if audio else None)
+
+
+# --- Degenerate dedup inputs ---------------------------------------------
+#
+# Random tiny corpora over a 4-word vocabulary, so documents share 3-word
+# shingles often and sometimes share none. At threshold 0 every verified
+# path must still emit only pairs that share a shingle, with the exact
+# Jaccard of their shingle sets; the prefix path is exact, the LSH paths
+# are subsets.
+
+_DOCS = st.lists(
+    st.lists(st.sampled_from("abcd"), min_size=3, max_size=7).map(" ".join),
+    min_size=2,
+    max_size=8,
+)
+
+
+def _py_shingles(text):
+    w = text.split(" ")
+    return {" ".join(w[i:i + 3]) for i in range(len(w) - 2)}
+
+
+def _py_jaccard(a, b):
+    return len(a & b) / len(a | b)
+
+
+def _docs_df(spark, texts, first_id=0):
+    return spark.createDataFrame(
+        list(enumerate(texts, start=first_id)), "doc_id long, text string"
+    )
+
+
+@given(texts=_DOCS)
+@settings(
+    max_examples=5,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+def test_threshold_zero_emits_only_pairs_sharing_a_shingle(spark, texts):
+    from ssg_etl_spark.cache import release_tracked
+    from ssg_etl_spark.operators import dedup
+
+    sh = {i: _py_shingles(t) for i, t in enumerate(texts)}
+    want = {
+        (a, b): _py_jaccard(sh[a], sh[b])
+        for a in sh for b in sh if a < b and sh[a] & sh[b]
+    }
+    docs = _docs_df(spark, texts)
+    try:
+        prefix = {
+            (r.doc_a, r.doc_b): r.jaccard
+            for r in dedup.ngram_jaccard_pairs_prefix(
+                docs, 0.0, max_shingle_df=None
+            ).collect()
+        }
+        assert prefix == want
+        mh = {
+            (r.doc_a, r.doc_b): r.jaccard
+            for r in dedup.minhash_lsh_pairs(
+                docs, 0.0, max_shingle_df=None
+            ).collect()
+        }
+        assert all(want.get(p) == j for p, j in mh.items())
+        # vs-index: odd ids are the batch, even ids the index.
+        idx = dedup.build_minhash_index(
+            docs.filter("doc_id % 2 = 0"), max_shingle_df=None
+        )
+        probe = dedup.minhash_lsh_pairs_vs_index(
+            idx["shingles"], idx["buckets"], idx["hot"],
+            docs.filter("doc_id % 2 = 1"), 0.0, max_shingle_df=None,
+            base_hot_buckets=idx["hot_buckets"],
+        ).collect()
+        for r in probe:
+            pair = (min(r.doc_new, r.doc_base), max(r.doc_new, r.doc_base))
+            assert want.get(pair) == r.jaccard
+    finally:
+        release_tracked()
+
+
+def test_pair_jaccard_drops_candidates_without_a_shared_shingle(spark):
+    """The verifier itself: a candidate pair with disjoint shingle sets
+    has Jaccard 0, which a threshold of 0 would otherwise pass."""
+    from ssg_etl_spark.operators import dedup
+
+    shingles = spark.createDataFrame(
+        [(1, "a b c"), (2, "x y z"), (3, "a b c")], "doc_id long, shingle string"
+    )
+    pairs = spark.createDataFrame([(1, 2), (1, 3)], "doc_a long, doc_b long")
+    got = {
+        (r.doc_a, r.doc_b): r.jaccard
+        for r in dedup._pair_jaccard(pairs, shingles, 0.0).collect()
+    }
+    assert got == {(1, 3): 1.0}
+
+
+def test_vs_index_doc_in_both_sides_uses_delta_shingles(spark):
+    """A doc_id present in the index and in the batch is verified with
+    the batch's shingle set on the batch side (|A| of the new text), not
+    a merge of both texts."""
+    from ssg_etl_spark.cache import release_tracked
+    from ssg_etl_spark.operators import dedup
+
+    base_texts = {1: "a b c d e f g h i j", 2: "a b c d x y"}
+    delta_texts = {1: "a b c d x y z"}
+    base = spark.createDataFrame(
+        sorted(base_texts.items()), "doc_id long, text string"
+    )
+    delta = spark.createDataFrame(
+        sorted(delta_texts.items()), "doc_id long, text string"
+    )
+    try:
+        idx = dedup.build_minhash_index(base, max_shingle_df=None)
+        got = {
+            (r.doc_new, r.doc_base): r.jaccard
+            for r in dedup.minhash_lsh_pairs_vs_index(
+                idx["shingles"], idx["buckets"], idx["hot"], delta, 0.0,
+                max_shingle_df=None,
+            ).collect()
+        }
+    finally:
+        release_tracked()
+    assert got[(1, 2)] == 0.8
+    for (new, old), j in got.items():
+        assert j == _py_jaccard(
+            _py_shingles(delta_texts[new]), _py_shingles(base_texts[old])
+        )
+
+
+def test_incremental_precomputed_same_values_with_aqe_and_broadcast_off(
+    spark, sf_dir
+):
+    """`dedup_incremental_precomputed` under an embedder's session with
+    AQE and broadcast joins off returns the same rows as under the
+    engine defaults (the union of a persisted index side and a shuffled
+    batch side once failed there with a partition-count zip error)."""
+    import hashlib
+
+    from ssg_etl_spark.cache import release_tracked
+    from ssg_etl_spark.plans.registry import load_all
+
+    spec = load_all(include_extra=True)["dedup_incremental_precomputed"]
+
+    def value_hash():
+        try:
+            df = spec.builder(spark, sf_dir)
+            cols = sorted(df.columns)
+            lines = sorted(
+                "|".join(repr(r[c]) for c in cols)
+                for r in df.select(*cols).collect()
+            )
+        finally:
+            release_tracked()
+        assert lines, "empty result"
+        return hashlib.sha256("\n".join(lines).encode()).hexdigest()
+
+    base = value_hash()
+    off = {
+        "spark.sql.adaptive.enabled": "false",
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+    }
+    old = {k: spark.conf.get(k) for k in off}
+    try:
+        for k, v in off.items():
+            spark.conf.set(k, v)
+        assert value_hash() == base
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)

@@ -858,3 +858,128 @@ def test_rest_poll_rate_stream_end_to_end(spark, tmp_path):
     rows = spark.read.parquet(out).collect()
     assert len(rows) >= 1
     assert {r.tick for r in rows} <= set(range(1, seq["n"] + 1))
+
+
+def _ge_checkpoint(tmp_path):
+    """A one-suite GE checkpoint on the events schema: one row rule
+    (quarantines odd event ids) and one batch-level expectation (audited)."""
+    import json
+
+    suites = tmp_path / "suites"
+    suites.mkdir()
+    (suites / "replay_suite.json").write_text(json.dumps({"expectations": [
+        {"expectation_type": "expect_column_values_to_be_in_set",
+         "kwargs": {"column": "parity", "value_set": [0]}},
+        {"expectation_type": "expect_column_to_exist",
+         "kwargs": {"column": "event_id"}},
+    ]}))
+    cp = tmp_path / "checkpoint.yml"
+    cp.write_text(
+        "name: replay_checkpoint\n"
+        "validations:\n"
+        "  - expectation_suite_name: replay_suite\n"
+    )
+    return str(cp), str(suites)
+
+
+# name -> (idempotent, sink factory(tmp_path) -> (apply, state paths),
+#          input table). SUM folds and append sinks skip a replayed batch
+# id; the MAX/OR/min-union folds re-fold it to the same state. The
+# idempotent folds key on the unique event_id (bottom-k with k above the
+# fixture's row count), so a new batch always changes their state.
+_REPLAY_SINKS = {
+    "hll": (True, lambda t, p: (
+        p.foreach_batch_hll_merge(str(t / "s"), ["event_type"], "event_id"),
+        [t / "s"]), "events"),
+    "bottomk": (True, lambda t, p: (
+        p.foreach_batch_bottomk_merge(str(t / "s"), "event_id", k=4096),
+        [t / "s"]), "events"),
+    "bottomk_grouped": (True, lambda t, p: (
+        p.foreach_batch_bottomk_merge_grouped(
+            str(t / "s"), "event_id", ["event_type"], k=4096),
+        [t / "s"]), "events"),
+    "bloom": (True, lambda t, p: (
+        p.foreach_batch_bloom_merge(str(t / "s"), "event_id"),
+        [t / "s"]), "events"),
+    "hist": (False, lambda t, p: (
+        p.foreach_batch_hist_merge(str(t / "s"), "value", 0.0, 500.0),
+        [t / "s"]), "events"),
+    "cms": (False, lambda t, p: (
+        p.foreach_batch_cms_merge(str(t / "s"), "event_type"),
+        [t / "s"]), "events"),
+    "logbucket": (False, lambda t, p: (
+        p.foreach_batch_logbucket_merge(str(t / "s"), "value"),
+        [t / "s"]), "events"),
+    "snapshot_commit": (False, lambda t, p: (
+        p.foreach_batch_snapshot_commit(str(t / "s")),
+        [t / "s"]), "events"),
+    "quality_gate": (False, lambda t, p: (
+        p.foreach_batch_quality_gate(
+            str(t / "ok"), str(t / "bad"), {"even": "event_id % 2 = 0"}),
+        [t / "ok", t / "bad"]), "events"),
+    "ge_audit": (False, lambda t, p: (
+        p.foreach_batch_ge_checkpoint_gate(
+            *_ge_checkpoint(t), str(t / "ok"), str(t / "bad"), str(t / "audit")),
+        [t / "ok", t / "bad", t / "audit"]), "events"),
+    "ivf_append": (False, lambda t, p: (
+        p.foreach_batch_ivf_append(str(t / "cents"), str(t / "s")),
+        [t / "s"]), "embeddings"),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_REPLAY_SINKS))
+def test_streaming_sinks_replay_policy(spark, sf_dir, tmp_path, name):
+    """One replay contract for every snapshot-log sink: fold three batches,
+    then replay the last batch id. SUM folds and append sinks commit no
+    new version and leave every table unchanged; the idempotent folds
+    leave the state unchanged, and after a vacuum a restart on a fresh
+    checkpoint (batch id 0 again) still folds new data."""
+    from ssg_etl_spark.operators import similarity
+    from ssg_etl_spark.sources import versioning as V
+    from ssg_etl_spark.streaming import pipeline
+
+    idempotent, make, table = _REPLAY_SINKS[name]
+    src = load_table(spark, sf_dir, table)
+    key = "vec_id" if table == "embeddings" else "event_id"
+    src = src.withColumn("parity", F.col(key) % 2)
+    if table == "embeddings":  # IVF cells append against frozen centroids
+        similarity.build_ivf_index(src, n_cells=4)["centroids"].write.parquet(
+            str(tmp_path / "cents")
+        )
+    # Slices by key // 2, so every batch holds both parities and both
+    # gate sinks commit on every batch.
+    batches = [src.filter((F.col(key) / 2).cast("long") % 4 == i) for i in range(4)]
+
+    def state(paths):
+        return [
+            sorted(str(r) for r in V.read_snapshot(spark, str(p)).collect())
+            if V.snapshot_versions(str(p)) else None
+            for p in paths
+        ]
+
+    apply, paths = make(tmp_path, pipeline)
+    for bid in range(3):
+        apply(batches[bid], batch_id=bid)
+    before = state(paths)
+    versions = [V.snapshot_versions(str(p)) for p in paths]
+    assert before[0] is not None
+    assert all(
+        V.last_batch_id(str(p)) == 2 for p in paths if V.snapshot_versions(str(p))
+    )
+
+    apply(batches[2], batch_id=2)
+    assert state(paths) == before
+    if not idempotent:
+        assert [V.snapshot_versions(str(p)) for p in paths] == versions
+        return
+
+    V.vacuum_snapshots(str(paths[0]), keep_last=1)
+    apply(batches[3], batch_id=0)
+    assert state(paths) != before
+    ref_dir = tmp_path / "ref"
+    ref_dir.mkdir()
+    ref_apply, ref_paths = make(ref_dir, pipeline)
+    for bid, b in enumerate(batches):
+        ref_apply(b, batch_id=bid)
+    assert state(paths) == state(ref_paths)
+    assert V.last_batch_id(str(paths[0])) == 2
