@@ -21,6 +21,27 @@ Scale design: payloads stay opaque binary through the plan (never parsed by
 Catalyst, never a join key); metadata columns are the pruned/filtered
 surface. mapInPandas streams Arrow record batches, so executor memory is
 bounded by batch size × payload size, not partition size.
+
+Python-batch boundary: every encode, decode and triage stage goes through
+:func:`_map_rows`, the module's one ``fan_out`` + ``mapInPandas`` site, and
+passes only a plain per-row function. The boundary owns:
+
+* the fan decision: the selected input is round-robin fanned out first
+  (:func:`~ssg_etl_spark.partitioning.fan_out`), because mapInPandas
+  parallelism equals the input partition count and a single-file scan
+  would otherwise run every Python batch on one core;
+* the batch loop: per row, the row function receives the selected input
+  values in order, except ``asset_id``, and returns a dict of output
+  columns (or a list of dicts, one output row each);
+* bytes coercion: ``payload`` reaches the row function as ``bytes``;
+* the NULL rule: a NULL ``payload`` never reaches the row function (a
+  crashed codec call would fail the whole job; a NULL row is inspectable
+  output). It yields one row carrying the pass-through columns (the
+  selected inputs named in the output schema, other than ``payload``:
+  ``asset_id``, plus ``media_type`` or the target dims where the stage
+  selects them) and NULL in every derived column;
+* the output frame, built with the schema's field names, so an empty or
+  NULL-only batch still has every column.
 """
 
 from __future__ import annotations
@@ -46,6 +67,54 @@ FEATURES_SCHEMA = T.StructType(
         T.StructField("feature", T.ArrayType(T.DoubleType())),
     ]
 )
+
+# Output of every encode stage: one synthesized asset per document.
+ASSETS_SCHEMA = T.StructType(
+    [
+        T.StructField("asset_id", T.LongType()),
+        T.StructField("media_type", T.StringType()),
+        T.StructField("payload", T.BinaryType()),
+    ]
+)
+
+
+def _map_rows(df: DataFrame, in_cols, fn, schema: T.StructType) -> DataFrame:
+    """The module's one Python-batch boundary: ``fn`` applied per row of
+    ``df.select(*in_cols)`` under the contract in the module docstring."""
+    src = df.select(*in_cols)
+    cols = src.columns
+    names = schema.fieldNames()
+    keep = [c for c in cols if c in names and c != "payload"]
+    args = [c for c in cols if c != "asset_id"]
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = []
+            for values in zip(*(pdf[c] for c in cols)):
+                row = dict(zip(cols, values))
+                if "payload" in row and row["payload"] is None:
+                    outs = {}
+                else:
+                    if "payload" in row:
+                        row["payload"] = bytes(row["payload"])
+                    outs = fn(*(row[c] for c in args))
+                for out in outs if isinstance(outs, list) else [outs]:
+                    out = {**{c: row[c] for c in keep}, **out}
+                    rows.append([out.get(c) for c in names])
+            yield pd.DataFrame(rows, columns=names, dtype=object)
+
+    return fan_out(src).mapInPandas(run, schema)
+
+
+def _encode_assets(documents: DataFrame, in_cols, media_type: str, encode) -> DataFrame:
+    """Encode stage: one ``media_type`` asset per document, its payload
+    ``encode(doc_id, ...)`` over the remaining ``in_cols``."""
+    return _map_rows(
+        documents,
+        in_cols,
+        lambda d, *a: {"asset_id": d, "media_type": media_type, "payload": encode(d, *a)},
+        ASSETS_SCHEMA,
+    )
 
 
 def media_from_documents(documents: DataFrame) -> DataFrame:
@@ -1190,25 +1259,11 @@ def jpeg_header_triage(assets: DataFrame) -> DataFrame:
     pre-decode filter column set (:func:`jpeg_header_scan` per asset,
     no entropy decode, no raster)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                meta = jpeg_header_scan(payload)
-                rows.append(
-                    {
-                        "asset_id": int(aid),
-                        "width": meta["width"],
-                        "height": meta["height"],
-                        "n_components": meta["n_components"],
-                        "quality_est": round(meta["quality_est"], 4),
-                    }
-                )
-            yield pd.DataFrame(rows)
+    def row(payload: bytes) -> dict:
+        meta = jpeg_header_scan(payload)
+        return {**meta, "quality_est": round(meta["quality_est"], 4)}
 
-    return fan_out(assets.select("asset_id", "payload")).mapInPandas(
-        run, JPEG_HEADER_SCHEMA
-    )
+    return _map_rows(assets, ("asset_id", "payload"), row, JPEG_HEADER_SCHEMA)
 
 
 def _jpeg_features(payload: bytes) -> list[float]:
@@ -1253,13 +1308,13 @@ def decode_media(payload: bytes, media_type: str, fake: bool = False) -> list[fl
     )
 
 
-PPM_ASSETS_SCHEMA = T.StructType(
-    [
-        T.StructField("asset_id", T.LongType()),
-        T.StructField("media_type", T.StringType()),
-        T.StructField("payload", T.BinaryType()),
-    ]
-)
+def _digest_image(encode, text: str, width: int, doc_id: int) -> bytes:
+    """Fixture image ``width``×(doc_id%4+1) through ``encode`` (PPM or
+    PNG); the raster is md5(text) cycled and cut to 3·width·height bytes."""
+    h = doc_id % 4 + 1
+    n = 3 * width * h
+    digest = hashlib.md5(str(text).encode("utf-8")).digest()
+    return encode(width, h, (digest * -(-n // len(digest)))[:n])
 
 
 def ppm_assets_from_documents(documents: DataFrame, width: int = 16) -> DataFrame:
@@ -1271,26 +1326,11 @@ def ppm_assets_from_documents(documents: DataFrame, width: int = 16) -> DataFram
     (the raster is WHOLE digest repeats: 3·16·h bytes = 3h·16, so each
     digest byte appears equally often and raster stats equal digest
     stats; width 8 would give 24h bytes — a half digest per odd row)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                h = int(doc_id) % 4 + 1
-                n = 3 * width * h
-                digest = hashlib.md5(str(text).encode("utf-8")).digest()
-                reps = -(-n // len(digest))
-                payloads.append(encode_ppm(width, h, (digest * reps)[:n]))
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["doc_id"],
-                    "media_type": "image",
-                    "payload": payloads,
-                }
-            )
-
-    return fan_out(documents.select("doc_id", "text")).mapInPandas(
-        run, PPM_ASSETS_SCHEMA
+    return _encode_assets(
+        documents,
+        ("doc_id", "text"),
+        "image",
+        lambda d, t: _digest_image(encode_ppm, t, width, d),
     )
 
 
@@ -1301,26 +1341,11 @@ def png_assets_from_documents(documents: DataFrame, width: int = 16) -> DataFram
     — so the decode side must genuinely inflate and unfilter to get the
     pixels back, and an engine-independent oracle can still replay every
     pixel statistic from the text digest alone."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                h = int(doc_id) % 4 + 1
-                n = 3 * width * h
-                digest = hashlib.md5(str(text).encode("utf-8")).digest()
-                reps = -(-n // len(digest))
-                payloads.append(encode_png(width, h, (digest * reps)[:n]))
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["doc_id"],
-                    "media_type": "image",
-                    "payload": payloads,
-                }
-            )
-
-    return fan_out(documents.select("doc_id", "text")).mapInPandas(
-        run, PPM_ASSETS_SCHEMA
+    return _encode_assets(
+        documents,
+        ("doc_id", "text"),
+        "image",
+        lambda d, t: _digest_image(encode_png, t, width, d),
     )
 
 
@@ -1338,36 +1363,32 @@ PNG_ROUNDTRIP_SCHEMA = T.StructType(
 )
 
 
+def _raster_row(decoded: tuple) -> dict:
+    """The roundtrip stats row from a decoder's ``(width, height, ...,
+    pixels)`` tuple."""
+    w, h, px = decoded[0], decoded[1], decoded[-1]
+    return {
+        "width": w,
+        "height": h,
+        "n_pixels": w * h,
+        "sum_byte": sum(px),
+        "min_byte": min(px),
+        "max_byte": max(px),
+        "raster_digest": hashlib.md5(px.hex().encode()).hexdigest(),
+    }
+
+
 def png_roundtrip(assets: DataFrame) -> DataFrame:
     """Arrow-batched PNG decode proof: per asset, IHDR dims, exact
     integer pixel statistics, and md5 over the lowercase-hex DECODED
     raster — the same digest convention as the PPM resize / Y4M frame
     oracles, so a hash match proves compress→decompress→unfilter
     returned every original byte."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                w, h, px = decode_png(payload)
-                rows.append(
-                    {
-                        "asset_id": int(aid),
-                        "width": w,
-                        "height": h,
-                        "n_pixels": w * h,
-                        "sum_byte": sum(px),
-                        "min_byte": min(px),
-                        "max_byte": max(px),
-                        "raster_digest": hashlib.md5(
-                            px.hex().encode()
-                        ).hexdigest(),
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return fan_out(assets.select("asset_id", "payload")).mapInPandas(
-        run, PNG_ROUNDTRIP_SCHEMA
+    return _map_rows(
+        assets,
+        ("asset_id", "payload"),
+        lambda p: _raster_row(decode_png(p)),
+        PNG_ROUNDTRIP_SCHEMA,
     )
 
 
@@ -1395,38 +1416,25 @@ def jpeg_fixture_raster(text: str, height: int) -> bytes:
     return row * height
 
 
+def _jpeg_fixture(doc_id: int, text: str) -> bytes:
+    """The bit-exact DC-exact baseline JPEG of one document."""
+    w, h = jpeg_fixture_dims(doc_id)
+    return encode_jpeg(
+        w,
+        h,
+        jpeg_fixture_raster(text, h),
+        quant_luma=JPEG_QUANT_LUMA_DCEXACT,
+        quant_chroma=JPEG_QUANT_CHROMA_DCEXACT,
+    )
+
+
 def jpeg_assets_from_documents(documents: DataFrame) -> DataFrame:
     """Synthesize REAL lossy-codec image assets: one baseline JPEG per
     document through the full encoder (color transform, DCT,
     quantization, Huffman), shaped so decoding is bit-exact and therefore
     engine-independently oracle-checkable (see
     :func:`jpeg_fixture_raster`)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                w, h = jpeg_fixture_dims(int(doc_id))
-                payloads.append(
-                    encode_jpeg(
-                        w,
-                        h,
-                        jpeg_fixture_raster(text, h),
-                        quant_luma=JPEG_QUANT_LUMA_DCEXACT,
-                        quant_chroma=JPEG_QUANT_CHROMA_DCEXACT,
-                    )
-                )
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["doc_id"],
-                    "media_type": "image",
-                    "payload": payloads,
-                }
-            )
-
-    return fan_out(documents.select("doc_id", "text")).mapInPandas(
-        run, PPM_ASSETS_SCHEMA
-    )
+    return _encode_assets(documents, ("doc_id", "text"), "image", _jpeg_fixture)
 
 
 def jpeg_roundtrip(assets: DataFrame) -> DataFrame:
@@ -1435,64 +1443,24 @@ def jpeg_roundtrip(assets: DataFrame) -> DataFrame:
     raster — the same digest convention as the PNG/PPM/Y4M oracles, so a
     hash match proves Huffman decode + dequant + IDCT + color transform
     returned every expected byte."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                w, h, _nc, px = decode_jpeg(payload)
-                rows.append(
-                    {
-                        "asset_id": int(aid),
-                        "width": w,
-                        "height": h,
-                        "n_pixels": w * h,
-                        "sum_byte": sum(px),
-                        "min_byte": min(px),
-                        "max_byte": max(px),
-                        "raster_digest": hashlib.md5(
-                            px.hex().encode()
-                        ).hexdigest(),
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return fan_out(assets.select("asset_id", "payload")).mapInPandas(
-        run, PNG_ROUNDTRIP_SCHEMA
+    return _map_rows(
+        assets,
+        ("asset_id", "payload"),
+        lambda p: _raster_row(decode_jpeg(p)),
+        PNG_ROUNDTRIP_SCHEMA,
     )
 
 
 def extract_features(assets: DataFrame, fake: bool = True) -> DataFrame:
-    """Arrow-batched feature extraction over media payloads.
-
-    mapInPandas so each Python call handles a whole record batch; the
+    """Arrow-batched feature extraction over media payloads: the
     returned frame carries a fixed-dim ``array<double>`` feature column
     ready for the similarity operators.
     """
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            # NULL payloads yield NULL features/sizes (a crashed codec call
-            # would fail the whole job; a null row is inspectable output).
-            feats = [
-                None if p is None else decode_media(p, m, fake=fake)
-                for p, m in zip(pdf["payload"], pdf["media_type"])
-            ]
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"],
-                    "media_type": pdf["media_type"],
-                    "payload_bytes": pdf["payload"].map(
-                        lambda p: None if p is None else len(p)
-                    ),
-                    "feature": feats,
-                }
-            )
-
-    # fan_out: mapInPandas parallelism == input partitions; a single-file
-    # scan would run every Python batch on one core.
-    return fan_out(assets.select("asset_id", "media_type", "payload")).mapInPandas(
-        run, FEATURES_SCHEMA
+    return _map_rows(
+        assets,
+        ("asset_id", "media_type", "payload"),
+        lambda m, p: {"payload_bytes": len(p), "feature": decode_media(p, m, fake=fake)},
+        FEATURES_SCHEMA,
     )
 
 
@@ -1571,44 +1539,30 @@ def _fake_resize(payload: bytes, width: int, height: int) -> bytes:
 def resize_images(
     assets: DataFrame, width: int = 64, height: int = 64, fake: bool = True
 ) -> DataFrame:
-    """Arrow-batched image resize stage (image assets only).
-
-    Same plumbing contract as :func:`extract_features`: mapInPandas over
-    (asset_id, payload) record batches, binary in → binary out, executor
-    memory bounded by batch size × payload size. ``fake=False`` runs the
-    REAL pure-stdlib path — binary PPM or 8-bit RGB PNG in,
-    nearest-neighbor-resampled same-format out (:func:`_real_resize`
+    """Arrow-batched image resize stage (image assets only), binary in →
+    binary out. ``fake=False`` runs the REAL pure-stdlib path — binary
+    PPM or 8-bit RGB PNG in, nearest-neighbor-resampled same-format out
+    (:func:`_real_resize`
     dispatches by magic bytes); other raster codecs substitute
     PIL/Pillow-SIMD at deployment behind the same batch signature.
     ``fake=True`` keeps the digest-seeded stand-in for corpora whose
-    formats this environment cannot decode. NULL payloads pass through as
-    NULL rows either way.
+    formats this environment cannot decode. A NULL payload keeps the
+    target ``width``/``height`` in its NULL row either way.
     """
     if width <= 0 or height <= 0:
         raise ValueError("target dimensions must be positive")
     resample = _fake_resize if fake else _real_resize
+    return _resize_stage(assets, width, height, resample)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            resized = [
-                None if p is None else resample(p, width, height)
-                for p in pdf["payload"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"],
-                    "width": width,
-                    "height": height,
-                    "payload": resized,
-                    "payload_bytes": [
-                        None if p is None else len(p) for p in resized
-                    ],
-                }
-            )
 
-    images = assets.filter(F.col("media_type") == "image")
-    return fan_out(images.select("asset_id", "payload")).mapInPandas(
-        run, RESIZED_SCHEMA
+def _resize_stage(assets: DataFrame, width: int, height: int, resample) -> DataFrame:
+    """The image assets of ``assets`` through ``resample(payload, w, h)``;
+    the target dims ride along as literal pass-through columns."""
+    return _map_rows(
+        assets.filter(F.col("media_type") == "image"),
+        ("asset_id", F.lit(width).alias("width"), F.lit(height).alias("height"), "payload"),
+        lambda w, h, p: {"payload": (out := resample(p, w, h)), "payload_bytes": len(out)},
+        RESIZED_SCHEMA,
     )
 
 
@@ -1642,40 +1596,21 @@ def transcode_resize_images(
     (mixed crawl formats in, one archival format out): the lossy step
     happened upstream at capture time; the pipeline itself must not add
     generation loss, which the PNG container guarantees and the
-    registered oracle proves byte-for-byte. Same Arrow-batched
-    mapInPandas plumbing and memory bounds as :func:`resize_images`;
-    NULL payloads pass through as NULL rows."""
+    registered oracle proves byte-for-byte. Same stage shape and NULL
+    rows as :func:`resize_images`."""
     import numpy as np
 
     if width <= 0 or height <= 0:
         raise ValueError("target dimensions must be positive")
 
-    def one(p: bytes) -> bytes:
+    def one(p: bytes, width: int, height: int) -> bytes:
         arr = _decode_image_rgb(p)
         h0, w0 = arr.shape[:2]
         rows = (2 * np.arange(height, dtype=np.int64) + 1) * h0 // (2 * height)
         cols = (2 * np.arange(width, dtype=np.int64) + 1) * w0 // (2 * width)
         return encode_png(width, height, arr[rows][:, cols].tobytes())
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            resized = [None if p is None else one(p) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"],
-                    "width": width,
-                    "height": height,
-                    "payload": resized,
-                    "payload_bytes": [
-                        None if p is None else len(p) for p in resized
-                    ],
-                }
-            )
-
-    images = assets.filter(F.col("media_type") == "image")
-    return fan_out(images.select("asset_id", "payload")).mapInPandas(
-        run, RESIZED_SCHEMA
-    )
+    return _resize_stage(assets, width, height, one)
 
 
 def frame_sample_plan(assets: DataFrame, every_ms: int = 1000) -> DataFrame:
@@ -1704,14 +1639,6 @@ def frame_sample_plan(assets: DataFrame, every_ms: int = 1000) -> DataFrame:
 
 WAV_SAMPLE_RATE = 8000
 WAV_BASE_SAMPLES = 2000
-
-WAV_ASSETS_SCHEMA = T.StructType(
-    [
-        T.StructField("asset_id", T.LongType()),
-        T.StructField("media_type", T.StringType()),
-        T.StructField("payload", T.BinaryType()),
-    ]
-)
 
 AUDIO_FEATURES_SCHEMA = T.StructType(
     [
@@ -1779,23 +1706,11 @@ def wav_assets_from_documents(documents: DataFrame) -> DataFrame:
     """Synthesize REAL decodable audio assets: one mono 16-bit PCM WAV
     per document, samples from :func:`wav_samples` — the audio twin of
     :func:`ppm_assets_from_documents` (encode stage, Arrow-batched)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [
-                encode_wav(wav_samples(d, wav_sample_count(d)))
-                for d in pdf["doc_id"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["doc_id"],
-                    "media_type": "audio",
-                    "payload": payloads,
-                }
-            )
-
-    return fan_out(documents.select("doc_id")).mapInPandas(
-        run, WAV_ASSETS_SCHEMA
+    return _encode_assets(
+        documents,
+        ("doc_id",),
+        "audio",
+        lambda d: encode_wav(wav_samples(d, wav_sample_count(d))),
     )
 
 
@@ -1807,35 +1722,22 @@ def audio_features(assets: DataFrame) -> DataFrame:
     duration. All features are exact integers, so the SQL oracle matches
     hash-for-hash with no float discipline needed."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def row(payload: bytes) -> dict:
         import numpy as np
 
-        for pdf in batches:
-            rows = []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                sr, s = decode_wav(payload)
-                s64 = s.astype(np.int64)
-                n = int(s64.shape[0])
-                rows.append(
-                    {
-                        "asset_id": int(aid),
-                        "sample_rate": sr,
-                        "n_samples": n,
-                        "duration_ms": n * 1000 // sr,
-                        "sum_sq": int((s64 * s64).sum()),
-                        "peak": int(np.abs(s64).max()) if n else 0,
-                        "zero_crossings": int(
-                            ((s64[:-1] < 0) != (s64[1:] < 0)).sum()
-                        )
-                        if n > 1
-                        else 0,
-                    }
-                )
-            yield pd.DataFrame(rows)
+        sr, s = decode_wav(payload)
+        s64 = s.astype(np.int64)
+        n = int(s64.shape[0])
+        return {
+            "sample_rate": sr,
+            "n_samples": n,
+            "duration_ms": n * 1000 // sr,
+            "sum_sq": int((s64 * s64).sum()),
+            "peak": int(np.abs(s64).max()) if n else 0,
+            "zero_crossings": int(((s64[:-1] < 0) != (s64[1:] < 0)).sum()) if n > 1 else 0,
+        }
 
-    return fan_out(assets.select("asset_id", "payload")).mapInPandas(
-        run, AUDIO_FEATURES_SCHEMA
-    )
+    return _map_rows(assets, ("asset_id", "payload"), row, AUDIO_FEATURES_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -1849,14 +1751,6 @@ def audio_features(assets: DataFrame) -> DataFrame:
 Y4M_W, Y4M_H = 16, 8  # 3·16·8 = 384 = 24 whole md5 digests per frame
 Y4M_HEADER = b"YUV4MPEG2 W%d H%d F25:1 Ip A1:1 C444\n" % (Y4M_W, Y4M_H)
 Y4M_FRAME_BYTES = 3 * Y4M_W * Y4M_H
-
-Y4M_ASSETS_SCHEMA = T.StructType(
-    [
-        T.StructField("asset_id", T.LongType()),
-        T.StructField("media_type", T.StringType()),
-        T.StructField("payload", T.BinaryType()),
-    ]
-)
 
 FRAME_FEATURES_SCHEMA = T.StructType(
     [
@@ -1921,28 +1815,11 @@ def y4m_assets_from_documents(documents: DataFrame) -> DataFrame:
     """Synthesize REAL decodable video assets: one Y4M clip per document
     with 2 + doc_id % 4 frames — the video twin of the PPM/WAV encode
     stages (Arrow-batched)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [
-                encode_y4m(
-                    [
-                        y4m_frame_raster(str(text), fi)
-                        for fi in range(2 + int(doc_id) % 4)
-                    ]
-                )
-                for doc_id, text in zip(pdf["doc_id"], pdf["text"])
-            ]
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["doc_id"],
-                    "media_type": "video",
-                    "payload": payloads,
-                }
-            )
-
-    return fan_out(documents.select("doc_id", "text")).mapInPandas(
-        run, Y4M_ASSETS_SCHEMA
+    return _encode_assets(
+        documents,
+        ("doc_id", "text"),
+        "video",
+        lambda d, t: encode_y4m([y4m_frame_raster(str(t), fi) for fi in range(2 + d % 4)]),
     )
 
 
@@ -1950,33 +1827,25 @@ def sample_frames(assets: DataFrame, every_n: int = 2) -> DataFrame:
     """Arrow-batched frame sampling through the REAL decoder: every
     ``every_n``-th frame of each clip (always including frame 0) becomes
     one output row with its md5 digest — the decode-side realization of
-    ``frame_sample_plan``'s plumbing. Bounded memory: one clip's frames
+    ``frame_sample_plan``'s plumbing; a NULL payload keeps one NULL row,
+    like the plan's ``explode_outer``. Bounded memory: one clip's frames
     at a time, rows carry digests, never rasters."""
     if every_n < 1:
         raise ValueError("every_n must be >= 1")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                _w, _h, frames = decode_y4m(bytes(payload))
-                for fi in range(0, len(frames), every_n):
-                    rows.append(
-                        {
-                            "asset_id": int(aid),
-                            "n_frames": len(frames),
-                            "frame_index": fi,
-                            "payload_bytes": len(payload),
-                            "frame_digest": hashlib.md5(
-                                frames[fi].hex().encode("ascii")
-                            ).hexdigest(),
-                        }
-                    )
-            yield pd.DataFrame(rows)
+    def rows(payload: bytes) -> list:
+        _w, _h, frames = decode_y4m(payload)
+        return [
+            {
+                "n_frames": len(frames),
+                "frame_index": fi,
+                "payload_bytes": len(payload),
+                "frame_digest": hashlib.md5(frames[fi].hex().encode("ascii")).hexdigest(),
+            }
+            for fi in range(0, len(frames), every_n)
+        ]
 
-    return fan_out(assets.select("asset_id", "payload")).mapInPandas(
-        run, FRAME_FEATURES_SCHEMA
-    )
+    return _map_rows(assets, ("asset_id", "payload"), rows, FRAME_FEATURES_SCHEMA)
 
 
 # --------------------------------------------------------------- MP3 triage
@@ -2135,14 +2004,6 @@ def mp3_header_scan(payload: bytes) -> dict:
     }
 
 
-MP3_ASSETS_SCHEMA = T.StructType(
-    [
-        T.StructField("asset_id", T.LongType()),
-        T.StructField("media_type", T.StringType()),
-        T.StructField("payload", T.BinaryType()),
-    ]
-)
-
 MP3_HEADER_SCHEMA = T.StructType(
     [
         T.StructField("asset_id", T.LongType()),
@@ -2189,23 +2050,11 @@ def mp3_assets_from_documents(documents: DataFrame) -> DataFrame:
     deterministic integer arithmetic a SQL oracle can replay exactly.
     The Arrow-batched encode twin of :func:`wav_assets_from_documents`
     for the format that stays undecoded."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for d, text in zip(pdf["doc_id"], pdf["text"]):
-                frame = mp3_frame_bytes(1 + int(d) % 14, int(d) % 3)
-                payloads.append(frame * (2 + len(text) % 7))
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["doc_id"],
-                    "media_type": "audio",
-                    "payload": payloads,
-                }
-            )
-
-    return fan_out(documents.select("doc_id", "text")).mapInPandas(
-        run, MP3_ASSETS_SCHEMA
+    return _encode_assets(
+        documents,
+        ("doc_id", "text"),
+        "audio",
+        lambda d, t: mp3_frame_bytes(1 + d % 14, d % 3) * (2 + len(t) % 7),
     )
 
 
@@ -2213,29 +2062,7 @@ def mp3_header_triage(assets: DataFrame) -> DataFrame:
     """Arrow-batched header-only triage over MPEG audio payloads: the
     pre-decode filter column set (:func:`mp3_header_scan` per asset —
     version/layer/rate/frames/bitrate/duration, no audio decode)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                meta = mp3_header_scan(bytes(payload))
-                rows.append(
-                    {
-                        "asset_id": int(aid),
-                        "version": meta["version"],
-                        "layer": meta["layer"],
-                        "sample_rate": meta["sample_rate"],
-                        "n_frames": meta["n_frames"],
-                        "bitrate_kbps": meta["bitrate_kbps"],
-                        "payload_bytes": meta["payload_bytes"],
-                        "duration_ms": meta["duration_ms"],
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return fan_out(assets.select("asset_id", "payload")).mapInPandas(
-        run, MP3_HEADER_SCHEMA
-    )
+    return _map_rows(assets, ("asset_id", "payload"), mp3_header_scan, MP3_HEADER_SCHEMA)
 
 
 # --------------------------------------------------------------- MP4 triage
@@ -2491,28 +2318,13 @@ def mp4_assets_from_documents(documents: DataFrame) -> DataFrame:
     ``doc_id%2=0``) — deterministic arithmetic a SQL oracle replays
     exactly. The container twin of :func:`mp3_assets_from_documents`
     for the bitstream that stays undecoded."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [
-                mp4_container_bytes(
-                    16 * (1 + int(d) % 4),
-                    16 * (1 + int(d) % 3),
-                    600 * (1 + len(text) % 10),
-                    with_audio=int(d) % 2 == 0,
-                )
-                for d, text in zip(pdf["doc_id"], pdf["text"])
-            ]
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["doc_id"],
-                    "media_type": "video",
-                    "payload": payloads,
-                }
-            )
-
-    return fan_out(documents.select("doc_id", "text")).mapInPandas(
-        run, MP3_ASSETS_SCHEMA
+    return _encode_assets(
+        documents,
+        ("doc_id", "text"),
+        "video",
+        lambda d, t: mp4_container_bytes(
+            16 * (1 + d % 4), 16 * (1 + d % 3), 600 * (1 + len(t) % 10), with_audio=d % 2 == 0
+        ),
     )
 
 
@@ -2520,18 +2332,7 @@ def mp4_header_triage(assets: DataFrame) -> DataFrame:
     """Arrow-batched container-only triage over MP4 payloads: the
     pre-decode filter column set (:func:`mp4_header_scan` per asset —
     brand/duration/tracks/codec/dims, no bitstream decode)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                meta = mp4_header_scan(bytes(payload))
-                rows.append({"asset_id": int(aid), **meta})
-            yield pd.DataFrame(rows)
-
-    return fan_out(assets.select("asset_id", "payload")).mapInPandas(
-        run, MP4_HEADER_SCHEMA
-    )
+    return _map_rows(assets, ("asset_id", "payload"), mp4_header_scan, MP4_HEADER_SCHEMA)
 
 
 # ------------------------------------------------------ image header triage
@@ -2639,55 +2440,16 @@ def mixed_image_assets_from_documents(documents: DataFrame) -> DataFrame:
     (8*(doc_id%2+1)-3) DC-exact columns), so a SQL oracle replays every
     triage field from (doc_id, text) alone."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(doc_id)
-                if d % 3 == 2:
-                    w, h = jpeg_fixture_dims(d)
-                    payloads.append(
-                        encode_jpeg(
-                            w,
-                            h,
-                            jpeg_fixture_raster(text, h),
-                            quant_luma=JPEG_QUANT_LUMA_DCEXACT,
-                            quant_chroma=JPEG_QUANT_CHROMA_DCEXACT,
-                        )
-                    )
-                else:
-                    h = d % 4 + 1
-                    n = 3 * 16 * h
-                    digest = hashlib.md5(str(text).encode("utf-8")).digest()
-                    raster = (digest * (-(-n // len(digest))))[:n]
-                    enc = encode_ppm if d % 3 == 0 else encode_png
-                    payloads.append(enc(16, h, raster))
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["doc_id"],
-                    "media_type": "image",
-                    "payload": payloads,
-                }
-            )
+    def encode(d: int, text: str) -> bytes:
+        if d % 3 == 2:
+            return _jpeg_fixture(d, text)
+        return _digest_image(encode_ppm if d % 3 == 0 else encode_png, text, 16, d)
 
-    return fan_out(documents.select("doc_id", "text")).mapInPandas(
-        run, PPM_ASSETS_SCHEMA
-    )
+    return _encode_assets(documents, ("doc_id", "text"), "image", encode)
 
 
 def image_header_triage(assets: DataFrame) -> DataFrame:
     """Arrow-batched dispatching triage over a mixed-format image
     column: the pre-decode filter row (:func:`image_header_scan` per
     asset — format/dims/components/quality, no decode)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                meta = image_header_scan(bytes(payload))
-                rows.append({"asset_id": int(aid), **meta})
-            yield pd.DataFrame(rows)
-
-    return fan_out(assets.select("asset_id", "payload")).mapInPandas(
-        run, IMAGE_HEADER_SCHEMA
-    )
+    return _map_rows(assets, ("asset_id", "payload"), image_header_scan, IMAGE_HEADER_SCHEMA)

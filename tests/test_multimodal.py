@@ -1382,3 +1382,115 @@ def test_image_header_triage_end_to_end(spark, sf_dir):
         else:
             assert (row.width, row.height) == (16, aid % 4 + 1)
             assert row.quality_est is None
+
+
+def _jpeg_payload() -> bytes:
+    w, h = MM.jpeg_fixture_dims(1)
+    return MM.encode_jpeg(w, h, MM.jpeg_fixture_raster("t", h))
+
+
+# Every per-asset codec stage: (run the stage, a payload it decodes, the
+# pass-through columns a NULL-payload row keeps).
+_PER_ASSET_STAGES = {
+    "jpeg_header_triage": (MM.jpeg_header_triage, _jpeg_payload, {"asset_id"}),
+    "png_roundtrip": (
+        MM.png_roundtrip,
+        lambda: MM.encode_png(2, 2, bytes(range(12))),
+        {"asset_id"},
+    ),
+    "jpeg_roundtrip": (MM.jpeg_roundtrip, _jpeg_payload, {"asset_id"}),
+    "extract_features": (
+        lambda a: MM.extract_features(a, fake=False),
+        lambda: MM.encode_ppm(2, 2, bytes(range(12))),
+        {"asset_id", "media_type"},
+    ),
+    "resize_images": (
+        lambda a: MM.resize_images(a, 4, 2, fake=False),
+        lambda: MM.encode_ppm(2, 2, bytes(range(12))),
+        {"asset_id", "width", "height"},
+    ),
+    "transcode_resize_images": (
+        lambda a: MM.transcode_resize_images(a, 4, 2),
+        _jpeg_payload,
+        {"asset_id", "width", "height"},
+    ),
+    "audio_features": (
+        MM.audio_features,
+        lambda: MM.encode_wav(MM.wav_samples(1, 64)),
+        {"asset_id"},
+    ),
+    "sample_frames": (
+        MM.sample_frames,
+        lambda: MM.encode_y4m([MM.y4m_frame_raster("t", 0)]),
+        {"asset_id"},
+    ),
+    "mp3_header_triage": (
+        MM.mp3_header_triage,
+        lambda: MM.mp3_frame_bytes(1, 0) * 2,
+        {"asset_id"},
+    ),
+    "mp4_header_triage": (
+        MM.mp4_header_triage,
+        lambda: MM.mp4_container_bytes(16, 16, 600),
+        {"asset_id"},
+    ),
+    "image_header_triage": (
+        MM.image_header_triage,
+        lambda: MM.encode_ppm(2, 2, bytes(range(12))),
+        {"asset_id"},
+    ),
+}
+
+
+@pytest.mark.parametrize("stage", sorted(_PER_ASSET_STAGES))
+def test_null_payload_yields_null_row(spark, stage):
+    """A NULL payload never reaches the codec: it yields exactly one row
+    with the stage's pass-through columns and NULL (not NaN, not 0) in
+    every derived column, while a decodable asset in the same input
+    still gets its derived values."""
+    run, payload, keep = _PER_ASSET_STAGES[stage]
+    assets = spark.createDataFrame(
+        [(1, "image", None), (2, "image", payload())],
+        "asset_id long, media_type string, payload binary",
+    )
+    out = run(assets)
+    rows = [r.asDict() for r in out.filter("asset_id = 1").collect()]
+    assert len(rows) == 1, rows
+    (row,) = rows
+    assert row["asset_id"] == 1
+    assert row.get("media_type", "image") == "image"
+    if "width" in keep:
+        assert (row["width"], row["height"]) == (4, 2)
+    derived = [f.name for f in out.schema.fields if f.name not in keep]
+    assert derived and all(row[c] is None for c in derived), row
+    ints = [
+        f.name
+        for f in out.schema.fields
+        if f.name not in keep and f.dataType.typeName() in ("integer", "long")
+    ]
+    good = out.filter("asset_id = 2").collect()
+    assert good and all(r[c] is not None for r in good for c in ints)
+
+
+def test_codec_stages_share_one_python_batch_boundary():
+    """AST lint: the module has exactly one ``mapInPandas`` call and one
+    ``fan_out`` call, both inside ``_map_rows``, so a new codec stage
+    passes a row function instead of forking the batch loop again."""
+    import ast
+    import inspect
+
+    tree = ast.parse(inspect.getsource(MM))
+    sites: dict[str, list[str]] = {"mapInPandas": [], "fan_out": []}
+    for top in tree.body:
+        owner = getattr(top, "name", "<module>")
+        for node in ast.walk(top):
+            if not isinstance(node, ast.Call):
+                continue
+            func = node.func
+            name = func.attr if isinstance(func, ast.Attribute) else getattr(func, "id", None)
+            if name in sites:
+                sites[name].append(owner)
+    assert sites == {"mapInPandas": ["_map_rows"], "fan_out": ["_map_rows"]}, (
+        f"Python-batch call sites outside the one boundary: {sites} — pass "
+        "a per-row function to _map_rows instead"
+    )
