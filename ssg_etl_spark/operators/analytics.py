@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from ssg_etl_spark.functions.scalar import utc_ts_lit
 from ssg_etl_spark.operators.rollups import DEC, dec_sum
 from ssg_etl_spark.partitioning import fan_out
+from ssg_etl_spark.session import local_frame
 
 
 def top_products(lineitem: DataFrame, part: DataFrame, k: int = 10) -> DataFrame:
@@ -633,7 +634,8 @@ def histogram_quantiles(
         if hit is not None:
             value, key, _ = hit
             out.append((float(q), value, key))
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         sorted(out), "q double, value double, bin int"
     )
 
@@ -688,7 +690,7 @@ def histogram_quantiles_from_bins(
         if hit is not None:
             value, key, _ = hit
             out.append((float(q), value, key))
-    return spark.createDataFrame(sorted(out), "q double, value double, bin int")
+    return local_frame(spark, sorted(out), "q double, value double, bin int")
 
 
 def histogram_quantiles_refined(
@@ -725,7 +727,8 @@ def histogram_quantiles_refined(
     mn, mx = float(b["mn"]), float(b["mx"])
     schema = "q double, value double, bin int, sub_bin int"
     if mx == mn:
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             sorted((float(q), _round6_half_up(mn), 0, 0) for q in qs), schema
         )
     width = (mx - mn) / n_bins
@@ -789,7 +792,7 @@ def histogram_quantiles_refined(
         if hit is not None:
             value, s, _ = hit
             out.append((q, value, bi, s))
-    return spark.createDataFrame(sorted(out), schema)
+    return local_frame(spark, sorted(out), schema)
 
 
 def quantile_rank(q: float, total: int) -> int:
@@ -878,7 +881,7 @@ def quantiles_exact(
         raise ValueError(f"{value_col} contains infinities")
     schema = "q double, value double"
     if mx == mn:
-        return spark.createDataFrame([(float(q), mn) for q in sorted(qs)], schema)
+        return local_frame(spark, [(float(q), mn) for q in sorted(qs)], schema)
 
     # Exactness discipline: the floor-binned CELL BOUNDARIES are only a
     # splitting heuristic; everything entering rank arithmetic is exact
@@ -1046,7 +1049,8 @@ def quantiles_exact(
     missing = [q for q in state if q not in done]
     if missing:
         raise RuntimeError(f"quantile zoom did not converge for qs={missing}")
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         sorted((q, done[q]) for q in state), schema
     )
 
@@ -1199,7 +1203,8 @@ def quantiles_exact_grouped(
             return
         env_lo = min(e[2] for e in fin)
         env_hi = max(e[3] for e in fin)
-        franges = spark.createDataFrame(
+        franges = local_frame(
+            spark,
             [
                 (*gvals, i, lo2, hi2)
                 for i, (_k, gvals, lo2, hi2, _b) in enumerate(fin)
@@ -1256,7 +1261,7 @@ def quantiles_exact_grouped(
             env_lo, env_hi = min(env_lo, lo), max(env_hi, hi)
             range_rows.append((*gvals, idx, lo, hi))
         if range_rows:
-            ranges = spark.createDataFrame(range_rows, rschema)
+            ranges = local_frame(spark, range_rows, rschema)
             wcol = (F.col("_hi") - F.col("_lo")) / n_bins
             bin_idx = F.least(
                 F.floor((F.col("_v") - F.col("_lo")) / wcol).cast("int"),
@@ -1341,7 +1346,7 @@ def quantiles_exact_grouped(
         for q in qlist
         if (gvals, q) in done
     ]
-    return spark.createDataFrame(rows, out_schema).orderBy(*group_cols, "q")
+    return local_frame(spark, rows, out_schema).orderBy(*group_cols, "q")
 
 
 def quantiles_exact_grouped_oracle_sql(

@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 from ssg_etl_spark.cache import persist_tracked
 from ssg_etl_spark.operators.similarity import _to_double, dot
 from ssg_etl_spark.partitioning import VECTOR_BYTES_PER_TASK, fan_out
+from ssg_etl_spark.session import local_frame
 
 # Wide enough that summing billions of unit-scale components cannot
 # overflow the integral part (38-12 = 26 digits) while keeping 12
@@ -282,7 +283,7 @@ def save_centroids(
     centroid) — the cross-session / cross-engine handoff: train in one
     job, label corpora from any later job or stream."""
     rows = [(int(cid), [float(x) for x in c]) for cid, c in centroids]
-    spark.createDataFrame(rows, CENTROIDS_SCHEMA).coalesce(1).write.mode(
+    local_frame(spark, rows, CENTROIDS_SCHEMA).coalesce(1).write.mode(
         "overwrite"
     ).parquet(path)
 

@@ -20,10 +20,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ssg_etl_spark.schemas import ETL_LOG
+from ssg_etl_spark.session import local_frame
 
 
 def empty_log(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame([], ETL_LOG)
+    return local_frame(spark, [], ETL_LOG)
 
 
 def get_watermark(log: DataFrame, source: str):
@@ -65,8 +66,7 @@ def has_new_data(df: DataFrame, ts_col: str, watermark) -> bool:
     return bool(incremental_read(df, ts_col, watermark).limit(1).take(1))
 
 
-def advance_watermark(
-    spark: SparkSession,
+def audit_row(
     source: str,
     batch: DataFrame,
     ts_col: str,
@@ -74,16 +74,13 @@ def advance_watermark(
     success: bool = True,
     status: str = "completed",
     error_message: str | None = None,
-) -> DataFrame:
-    """M3: build the one-row audit/advance record for a finished batch.
-
-    Caller appends it to the log table (`mode("append")`); the write is the
-    only side effect in the protocol and is idempotent per process_log_id.
-    """
+) -> dict:
+    """M3: the one audit/advance record (``schemas.ETL_LOG`` fields) for a
+    finished batch, as a Python dict — one aggregate job over the batch."""
     agg = batch.agg(
         F.count(F.lit(1)).alias("n"), F.max(ts_col).alias("mx")
     ).first()
-    row = {
+    return {
         "process_log_id": str(uuid.uuid4()),
         "source_connection": source,
         "rows_extracted": agg["n"],
@@ -94,7 +91,28 @@ def advance_watermark(
         "status": status,
         "error_message": error_message,
     }
-    return spark.createDataFrame([row], ETL_LOG)
+
+
+def advance_watermark(
+    spark: SparkSession,
+    source: str,
+    batch: DataFrame,
+    ts_col: str,
+    started_at: dt.datetime,
+    success: bool = True,
+    status: str = "completed",
+    error_message: str | None = None,
+) -> DataFrame:
+    """M3: the one-row audit/advance record for a finished batch, as a
+    local frame (``audit_row``'s dict).
+
+    Caller appends it to the log table (`mode("append")`); the write is the
+    only side effect in the protocol and is idempotent per process_log_id.
+    """
+    row = audit_row(
+        source, batch, ts_col, started_at, success, status, error_message
+    )
+    return local_frame(spark, [row], ETL_LOG)
 
 
 def run_incremental(

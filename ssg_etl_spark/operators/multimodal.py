@@ -42,6 +42,14 @@ passes only a plain per-row function. The boundary owns:
   selects them) and NULL in every derived column;
 * the output frame, built with the schema's field names, so an empty or
   NULL-only batch still has every column.
+
+Encode stages (:func:`_encode_assets`) add one rule on their side: a
+document whose encoded input (``text``) is NULL yields its asset row
+with a NULL ``payload`` — the encoder never sees the NULL, so no stage
+encodes the string "None" or fails the job on it, and the decode
+stages' NULL-payload rule carries the row on. An encoder that reads
+``doc_id`` alone (``wav_assets_from_documents``) has no such input and
+encodes every row.
 """
 
 from __future__ import annotations
@@ -108,11 +116,16 @@ def _map_rows(df: DataFrame, in_cols, fn, schema: T.StructType) -> DataFrame:
 
 def _encode_assets(documents: DataFrame, in_cols, media_type: str, encode) -> DataFrame:
     """Encode stage: one ``media_type`` asset per document, its payload
-    ``encode(doc_id, ...)`` over the remaining ``in_cols``."""
+    ``encode(doc_id, ...)`` over the remaining ``in_cols`` — or NULL when
+    one of those is NULL (the encode rule in the module docstring)."""
     return _map_rows(
         documents,
         in_cols,
-        lambda d, *a: {"asset_id": d, "media_type": media_type, "payload": encode(d, *a)},
+        lambda d, *a: {
+            "asset_id": d,
+            "media_type": media_type,
+            "payload": None if any(x is None for x in a) else encode(d, *a),
+        },
         ASSETS_SCHEMA,
     )
 

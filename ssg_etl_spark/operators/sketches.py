@@ -32,6 +32,8 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ssg_etl_spark.session import local_frame
+
 HLL_P = 8  # 2^8 = 256 registers per sketch
 HLL_M = 1 << HLL_P
 HLL_RHO_HEX = 12  # 48 bits of rho material
@@ -446,12 +448,12 @@ def logbucket_quantiles(
                         )
                     )
                     break
-        return spark.createDataFrame(out, "q double, value_est double")
+        return local_frame(spark, out, "q double, value_est double")
     qrows = [
         (str(q), Fraction(str(q)).numerator, Fraction(str(q)).denominator)
         for q in qs
     ]
-    qdf = spark.createDataFrame(qrows, "_qs string, _qnum long, _qden long")
+    qdf = local_frame(spark, qrows, "_qs string, _qnum long, _qden long")
     wcum = (
         Window.partitionBy(*group_cols)
         .orderBy("blo")
@@ -677,7 +679,8 @@ def bottomk_sketch(
         if len(seen) >= k or len(rows) < n:
             picked = sorted(seen.items())[:k]
             schema = base.select("h", key_col).schema
-            return spark.createDataFrame(
+            return local_frame(
+                spark,
                 [(h, v) for h, v in picked], schema
             )
         if rnd == 0:
@@ -685,7 +688,8 @@ def bottomk_sketch(
         n *= 2
     rows = base.dropDuplicates(["h"]).orderBy("h").limit(k).collect()
     schema = base.select("h", key_col).schema
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         sorted((r["h"], r[key_col]) for r in rows), schema
     )
 
@@ -722,7 +726,8 @@ def kmv_distinct_estimate(
                 Decimal("0.0001"), rounding=ROUND_HALF_UP
             )
         )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(len(hashes), est)], "n_sample bigint, approx_distinct double"
     )
 
@@ -794,7 +799,8 @@ def kmv_set_estimates(
         est_a = _r4(len(a_only) * scale)
         est_b = _r4(len(b_only) * scale)
     jac = _r4(len(both) / len(window)) if window else 0.0
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(len(window), est_u, est_i, est_a, est_b, jac)],
         "n_window bigint, union_est double, intersection_est double,"
         " a_only_est double, b_only_est double, jaccard_est double",

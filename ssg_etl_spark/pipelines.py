@@ -15,8 +15,15 @@ the run durable, then staging swaps into place and the audit-log row is
 appended; `_recover` finishes any interrupted run at the next start. A
 crash at ANY point either leaves the watermark unadvanced (batch replays
 into an untouched target) or completes on recovery — never a double-count.
+The audit row is built once per run, as a Python dict (one aggregate job
+over the batch): the commit marker records it and the log append writes
+it through ``session.local_frame``, so no Python worker runs and nothing
+reads the row back from Spark.
 The swap uses local-FS rename; on HDFS/S3 swap this layer for a
 transactional table format (Delta/Iceberg MERGE), keeping the same logic.
+
+Every state read resolves its schema without a Spark job: the log reads
+with ``schemas.ETL_LOG``, the target with the batch rollup's schema.
 
 Scale: each run shuffles only the new batch (watermark-pruned scan, cached
 once and reused for the audit aggregate + rollup — one source scan); the
@@ -33,9 +40,12 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ssg_etl_spark.operators import incremental as inc
 from ssg_etl_spark.operators.rollups import rollup_date_type
+from ssg_etl_spark.schemas import ETL_LOG
+from ssg_etl_spark.session import local_frame
 
 SOURCE_NAME = "events_rollup"
 
@@ -49,10 +59,12 @@ def _paths(state_dir: str) -> dict[str, str]:
     }
 
 
-def _read_or_none(spark: SparkSession, path: str) -> DataFrame | None:
+def _read_or_none(
+    spark: SparkSession, path: str, schema: T.StructType
+) -> DataFrame | None:
     if not os.path.exists(path):
         return None
-    return spark.read.parquet(path)
+    return spark.read.schema(schema).parquet(path)
 
 
 def merge_additive(
@@ -91,20 +103,21 @@ def _write_marker(marker_path: str, payload: dict) -> None:
 
 
 def _log_has_run(spark: SparkSession, log_path: str, run_id: str) -> bool:
-    log = _read_or_none(spark, log_path)
+    log = _read_or_none(spark, log_path, ETL_LOG)
     if log is None:
         return False
     return log.filter(F.col("process_log_id") == run_id).limit(1).count() > 0
 
 
-def _publish(spark: SparkSession, p: dict[str, str], log_row: DataFrame | None) -> None:
-    """Swap staging → target and append the audit row; safe to re-run."""
+def _publish(spark: SparkSession, p: dict[str, str], log_row: dict | None) -> None:
+    """Swap staging → target and append the audit row (an ``ETL_LOG``
+    dict); safe to re-run."""
     if os.path.exists(p["staging"]):
         if os.path.exists(p["target"]):
             shutil.rmtree(p["target"])
         os.rename(p["staging"], p["target"])
     if log_row is not None:
-        log_row.write.mode("append").parquet(p["log"])
+        local_frame(spark, [log_row], ETL_LOG).write.mode("append").parquet(p["log"])
     os.remove(p["marker"])
 
 
@@ -118,8 +131,6 @@ def _recover(spark: SparkSession, p: dict[str, str]) -> None:
             # Swap + log landed; only the marker removal was lost.
             _publish(spark, p, None)
         else:
-            from ssg_etl_spark.schemas import ETL_LOG
-
             raw = committed["log_row"]
             parsed = {
                 f.name: (
@@ -132,7 +143,7 @@ def _recover(spark: SparkSession, p: dict[str, str]) -> None:
                 )
                 for f in ETL_LOG.fields
             }
-            _publish(spark, p, spark.createDataFrame([parsed], ETL_LOG))
+            _publish(spark, p, parsed)
     elif os.path.exists(p["staging"]):
         shutil.rmtree(p["staging"])  # un-committed staging: discard
 
@@ -204,7 +215,7 @@ def _run_locked(
 ) -> dict:
     _recover(spark, p)
 
-    log = _read_or_none(spark, p["log"])
+    log = _read_or_none(spark, p["log"], ETL_LOG)
     if log is None:
         log = inc.empty_log(spark)
 
@@ -218,19 +229,19 @@ def _run_locked(
     batch = inc.incremental_read(events, "ts", wm)
     batch.persist()  # one source scan feeds both the audit agg and the rollup
     try:
-        log_row = inc.advance_watermark(spark, SOURCE_NAME, batch, "ts", started)
+        log_row = inc.audit_row(SOURCE_NAME, batch, "ts", started)
         delta = rollup_date_type(batch)
-        target = _read_or_none(spark, p["target"])
+        target = _read_or_none(spark, p["target"], delta.schema)
         merged = merge_additive(
             target, delta, ["event_date", "event_type"], ["total_value", "n_events"]
         )
         merged.write.mode("overwrite").parquet(p["staging"])  # 1) stage
-        row_dict = {
+        marker_row = {
             k: (v.isoformat() if isinstance(v, dt.datetime) else v)
-            for k, v in log_row.first().asDict().items()
+            for k, v in log_row.items()
         }
-        _write_marker(p["marker"], {"run_id": row_dict["process_log_id"], "log_row": row_dict})  # 2) commit
+        _write_marker(p["marker"], {"run_id": log_row["process_log_id"], "log_row": marker_row})  # 2) commit
         _publish(spark, p, log_row)  # 3) swap + audit append + marker removal
-        return {"extracted": row_dict["rows_extracted"], "skipped": False}
+        return {"extracted": log_row["rows_extracted"], "skipped": False}
     finally:
         batch.unpersist()

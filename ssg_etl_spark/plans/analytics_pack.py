@@ -12,6 +12,7 @@ from ssg_etl_spark.functions.scalar import null_profile_exprs, safe_ratio
 from ssg_etl_spark.operators import analytics, rollups, sketches
 from ssg_etl_spark.operators.rollups import DEC
 from ssg_etl_spark.plans.registry import register
+from ssg_etl_spark.session import local_frame
 from ssg_etl_spark.sources.tables import load_table, load_tables
 
 # One point of truth for aggregate precision: the engine-side constant
@@ -591,7 +592,8 @@ def quality_suite_part(spark: SparkSession, sf_dir: str) -> DataFrame:
         Q.expect_row_count_between(1, 1_000_000_000),
     ]
     results = Q.run_suite(load_table(spark, sf_dir, "part"), suite)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(r["name"], r["passed"]) for r in results],
         "expectation string, passed boolean",
     )

@@ -19,6 +19,7 @@ from ssg_etl_spark.operators import (
 )
 from ssg_etl_spark.partitioning import fan_out
 from ssg_etl_spark.plans.registry import register
+from ssg_etl_spark.session import local_frame
 from ssg_etl_spark.sources.tables import load_table
 
 # Shared oracle fragment: DISTINCT 3-word shingles per document. DuckDB 1.0
@@ -3080,7 +3081,8 @@ def domain_blocklist(spark: SparkSession, sf_dir: str) -> DataFrame:
     registrable domain is on a (broadcast, list-sized) blocklist — the
     other half of the C4-style domain step next to the cap. Extra
     registry: locally oracle-verified."""
-    blocked = spark.createDataFrame(
+    blocked = local_frame(
+        spark,
         [("src0.org",), ("src7.org",), ("src13.org",)], "domain string"
     )
     return web.domain_blocklist_filter(

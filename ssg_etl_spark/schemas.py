@@ -7,16 +7,21 @@ same discipline: explicit StructTypes everywhere, no inference for the
 engine's own tables (SURVEY §1.3).
 
 Time contract (round 8): engine-owned tables carry TIMESTAMP_NTZ
-(UTC wall-clock) — NTZ is also the zone-free ``createDataFrame`` path: a
+(UTC wall-clock) — NTZ is also the zone-free ``local_frame`` path: a
 naive Python datetime converts by its wall fields, where TimestampType
 converts through the HOST zone. The TESTDATA schemas below keep their
 event-time columns as TIMESTAMP because Spark's streaming watermark
 REJECTS NTZ (EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE, measured on 4.1):
 these schemas exist for ``readStream``, whose windows/session gaps are
 instant-based (epoch-anchored, zone-free) and whose outputs the
-stream==batch pins compare under the engine's pinned-UTC session. Batch
-scans never use these schemas — ``load_table`` normalizes every
-timestamp column to NTZ at the boundary.
+stream==batch pins compare under the engine's pinned-UTC session.
+
+Batch scans read with ``TESTDATA_BATCH``, the same schemas with every
+TIMESTAMP column as TIMESTAMP_NTZ — what the parquet files carry (naive
+microsecond timestamps), so ``load_table`` resolves a scan without a
+schema-inference job and hands out NTZ-UTC columns by type.
+``tests/test_sources.py`` pins each batch schema to the footer of its
+file at every scale factor.
 
 Two families live here:
 
@@ -32,8 +37,8 @@ from __future__ import annotations
 from pyspark.sql import types as T
 
 # --------------------------------------------------------------------------
-# Driver testdata tables (parquet already carries these; kept as the single
-# source of truth for tests / generators / streaming schemas).
+# Driver testdata tables: the single source of truth for streaming schemas,
+# generators, tests and (through TESTDATA_BATCH) every batch scan.
 # --------------------------------------------------------------------------
 
 REGION = T.StructType(
@@ -148,6 +153,29 @@ TESTDATA: dict[str, T.StructType] = {
     "events": EVENTS,
     "documents": DOCUMENTS,
     "embeddings": EMBEDDINGS,
+}
+
+
+def _batch_schema(schema: T.StructType) -> T.StructType:
+    """The batch-scan form of a streaming schema: TIMESTAMP columns
+    become TIMESTAMP_NTZ, everything else is unchanged."""
+    return T.StructType(
+        [
+            T.StructField(
+                f.name,
+                T.TimestampNTZType()
+                if isinstance(f.dataType, T.TimestampType)
+                else f.dataType,
+                f.nullable,
+                f.metadata,
+            )
+            for f in schema.fields
+        ]
+    )
+
+
+TESTDATA_BATCH: dict[str, T.StructType] = {
+    name: _batch_schema(s) for name, s in TESTDATA.items()
 }
 
 # --------------------------------------------------------------------------

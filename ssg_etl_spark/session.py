@@ -10,6 +10,9 @@ Catalyst prunes parquet scans.
 ``$SPARK_GRAFT_SHUFFLE``, else 32, whatever the core count (the test suite
 passes 8). On a real cluster it should be ~2-3x total executor cores (or
 left to AQE's coalescing with a high initial value).
+
+``local_frame`` is the engine's one way to turn Python rows into a
+DataFrame (a JVM local relation built from one Arrow table).
 """
 
 from __future__ import annotations
@@ -102,3 +105,58 @@ def get_spark(
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def _arrow_value(dtype):
+    """Python value → what ``pyarrow.array`` takes for ``dtype``, or None
+    where pyarrow converts the value as the Python-row path does (maps
+    from dicts and structs from tuples included).
+
+    Timestamps, top-level or array elements, go through the type's own
+    ``toInternal`` (epoch micros), so a naive ``datetime`` means what it
+    meant on the Python-row path: wall fields for TIMESTAMP_NTZ, the
+    Python process's local zone for TIMESTAMP (Arrow would otherwise read
+    it in the session zone)."""
+    from pyspark.sql import types as T
+
+    if isinstance(dtype, (T.TimestampType, T.TimestampNTZType)):
+        conv = dtype.toInternal
+    elif isinstance(dtype, T.ArrayType) and (elem := _arrow_value(dtype.elementType)):
+        conv = lambda v: [elem(x) for x in v]  # noqa: E731
+    else:
+        return None
+    return lambda v: None if v is None else conv(v)
+
+
+def local_frame(spark: SparkSession, rows, schema):
+    """A small driver-side table as a DataFrame: the one way the engine
+    turns Python rows into Spark rows.
+
+    ``rows`` are tuples, ``Row`` objects or dicts; ``schema`` a
+    ``StructType`` or DDL string. The rows travel as one Arrow table, so
+    the frame is a JVM local relation (below Spark's
+    ``arrow.localRelationThreshold``, 48 MB by default): no Python worker
+    ever runs for it, ``first()``/``collect()`` start no Spark job, its
+    statistics are exact (so joins can broadcast it), and a one-row frame
+    writes one file. Values mean what they meant to ``createDataFrame``
+    on Python rows (see ``_arrow_value``)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType, _parse_datatype_string
+
+    if not isinstance(schema, StructType):
+        schema = _parse_datatype_string(schema)
+    arrow_schema = to_arrow_schema(schema)
+    convs = [_arrow_value(f.dataType) for f in schema.fields]
+    cols = [[] for _ in convs]
+    for row in rows:
+        # Dicts bind by field name, tuples and Rows by position — the
+        # Python-row path's rule.
+        values = [row.get(n) for n in schema.names] if isinstance(row, dict) else row
+        for col, conv, v in zip(cols, convs, values):
+            col.append(conv(v) if conv else v)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)

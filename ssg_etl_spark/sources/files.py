@@ -26,6 +26,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ssg_etl_spark.session import local_frame
+
 
 def read_csv(
     spark: SparkSession,
@@ -273,7 +275,7 @@ def read_excel(
 
     Each xlsx is parsed driver-side (stdlib zip+XML — reference data is
     dimension-sized control-plane input, like the REST payloads), cells are
-    cast to the declared schema through ``createDataFrame`` on string rows.
+    cast to the declared schema through ``local_frame`` on string rows.
     At bulk scale land xlsx → CSV/parquet at the ingest edge, or ship the
     spark-excel datasource; this path is for small reference workbooks.
     """
@@ -310,7 +312,7 @@ def read_excel(
     as_strings = T.StructType(
         [T.StructField(f.name, T.StringType()) for f in out_fields]
     )
-    raw = spark.createDataFrame(all_rows, as_strings)
+    raw = local_frame(spark, all_rows, as_strings)
     return raw.select(
         *[F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields],
         *([F.col(source_col)] if source_col else []),
@@ -329,7 +331,7 @@ def flatten_json_records(
     """
     arr = T.ArrayType(record_schema)
     return (
-        spark.createDataFrame([(payload,)], "payload string")
+        local_frame(spark, [(payload,)], "payload string")
         .select(F.explode(F.from_json(F.col("payload"), arr)).alias("rec"))
         .select("rec.*")
     )

@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ssg_etl_spark.session import local_frame
+
 
 def stamp_modified(df: DataFrame, col: str = "modified_at", batch_ts=None) -> DataFrame:
     """J11: ModifiedDate trigger → write-path timestamp column.
@@ -203,7 +205,7 @@ def compact_parquet(
             (*vals, max(1, -(-size // target_file_bytes))) for vals, size in leaves
         ]
         schema = ", ".join(f"`{c}` string" for c in part_cols) + ", `_n_salts` int"
-        salt_map = spark.createDataFrame(rows, schema)
+        salt_map = local_frame(spark, rows, schema)
         n_total = max(1, sum(r[-1] for r in rows))
         non_part = [c for c in df.columns if c not in part_cols]
         if not non_part:  # degenerate: partition cols only → nothing to salt on

@@ -14,6 +14,10 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from ssg_etl_spark.schemas import TESTDATA_BATCH
+from ssg_etl_spark.session import local_frame
 
 # Belt: load_table re-asserts the UTC session zone — but ONLY on
 # engine-built sessions (session.py marks them via
@@ -41,40 +45,56 @@ def tz_pin_suppressed():
     finally:
         _PIN_SESSION_UTC = prev
 
-TABLE_NAMES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
+TABLE_NAMES = tuple(TESTDATA_BATCH)
+
+
+def _events_ts_is_nanos(path: str) -> bool:
+    """Whether an events table stores ``ts`` as TIMESTAMP(NANOS), read
+    from one file's parquet footer on the driver (no Spark job)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    if os.path.isdir(path):
+        files = sorted(
+            os.path.join(path, n) for n in os.listdir(path)
+            if n.endswith(".parquet") and not n.startswith(("_", "."))
+        )
+    else:
+        files = [path] if os.path.isfile(path) else []
+    if not files:  # nothing to read: the scan reports it
+        return False
+    ts = pq.read_schema(files[0]).field("ts").type
+    return pa.types.is_timestamp(ts) and ts.unit == "ns"
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one testdata table. Plain parquet scan — no collect, no cache.
 
-    ``events.parquet`` stores TIMESTAMP(NANOS), which Spark's vectorized
-    reader rejects; we read it as int64 nanos (legacy conf) and truncate to
-    microseconds with integer division — byte-identical to DuckDB's
-    nanos→micros truncation, so oracles still hash-match.
+    Scan contract: the scan reads with the declared schema
+    ``schemas.TESTDATA_BATCH[name]`` (TIMESTAMP columns as TIMESTAMP_NTZ),
+    so resolving it lists files but starts no schema-inference job;
+    ``tests/test_sources.py`` pins every declared schema to the files'
+    footers. Any other name is a ``ValueError``.
+
+    ``events.parquet`` written with TIMESTAMP(NANOS) (Spark's vectorized
+    reader rejects it; one footer read decides) is read with ``ts`` as
+    int64 nanos (legacy conf) and truncated to microseconds with integer
+    division — byte-identical to DuckDB's nanos→micros truncation, so
+    oracles still hash-match.
 
     Time contract (round 8): every timestamp column this function returns
     is TIMESTAMP_NTZ carrying UTC wall-clock fields — calendar extraction
     downstream is then zone-free BY TYPE, no per-site wrapper. Parquet
-    naive timestamps already read as NTZ; any column that comes back as a
-    session-rendered TIMESTAMP instant (e.g. the nanos→``timestamp_micros``
-    rebuild) is normalized here through ``utc_wall`` (instant → UTC
-    fields, zone-independent).
+    naive timestamps read as NTZ through the declared schema; a column
+    that comes back as a session-rendered TIMESTAMP instant (the
+    nanos→``timestamp_micros`` rebuild) is normalized here through
+    ``utc_wall`` (instant → UTC fields, zone-independent).
 
-    Session-conf policy: ``nanosAsLong`` is load-bearing on ANY session —
-    without it the events scan errors outright (vanilla Spark cannot read
-    TIMESTAMP(NANOS) parquet) — and it stays set because it must hold at
-    task-execution time, not just plan time. The UTC zone pin is
+    Session-conf policy: ``nanosAsLong`` is load-bearing on ANY session
+    for a nanos events file — without it the scan errors outright
+    (vanilla Spark cannot read TIMESTAMP(NANOS) parquet) — and it stays
+    set because it must hold at task-execution time, not just plan time.
+    The UTC zone pin is
     re-asserted only on ENGINE-BUILT sessions (session.py already sets it
     at build time; this guards against later app code changing it):
     embedder-built sessions are never mutated, because the NTZ contract
@@ -83,22 +103,26 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     from ssg_etl_spark.functions.scalar import utc_wall
 
+    if name not in TESTDATA_BATCH:
+        raise ValueError(f"{name!r} is not a testdata table: {TABLE_NAMES}")
     path = os.path.join(sf_dir, f"{name}.parquet")
     if _PIN_SESSION_UTC and (
         spark.conf.get("spark.ssg_etl_spark.engineSession", "false") == "true"
     ):
         spark.conf.set("spark.sql.session.timeZone", "UTC")
-    if name == "events":
+    schema = TESTDATA_BATCH[name]
+    if name == "events" and _events_ts_is_nanos(path):
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
-        if dict(df.dtypes).get("ts") == "bigint":
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    else:
-        df = spark.read.parquet(path)
-    for col, dtype in df.dtypes:
-        if dtype == "timestamp":  # instant → NTZ-UTC boundary normalization
-            df = df.withColumn(col, utc_wall(F.col(col)))
-    return df
+        as_long = T.StructType(
+            [
+                T.StructField(f.name, T.LongType()) if f.name == "ts" else f
+                for f in schema.fields
+            ]
+        )
+        return spark.read.schema(as_long).parquet(path).withColumn(
+            "ts", utc_wall(F.timestamp_micros(F.expr("ts div 1000")))
+        )
+    return spark.read.schema(schema).parquet(path)
 
 
 def jdbc_read_options(
@@ -248,8 +272,6 @@ def reflect_struct_type(
     Unknown types fall back to StringType (JDBC reads them as their
     string form) unless ``strict`` — then they raise.
     """
-    from pyspark.sql import types as T
-
     scalar = {
         "boolean": T.BooleanType,
         "tinyint": T.ByteType,
@@ -296,4 +318,4 @@ def catalog_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir)
     known = set(TABLE_NAMES)
     names = sorted(t.name for t in spark.catalog.listTables() if t.name in known)
-    return spark.createDataFrame([(n,) for n in names], "table_name string")
+    return local_frame(spark, [(n,) for n in names], "table_name string")

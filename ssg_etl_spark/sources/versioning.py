@@ -25,6 +25,13 @@ Design (deliberately minimal, single-writer):
 * Readers load exactly the manifest's file list (``spark.read.parquet``
   with explicit paths): time travel is O(manifest) metadata work, and
   file-level pruning/pushdown applies to the listed files as usual.
+* A manifest records the schema of the files it lists (``schema``, the
+  committed frame's ``StructType`` JSON with every field nullable, as a
+  parquet read returns it), and readers scan with it, so a read
+  resolves without a schema-inference job. An append whose frame
+  schema differs from the previous version's records none, and so do
+  manifests written before the field existed: those reads infer, as
+  before.
 
 Scale notes: the manifest holds file paths, not row data — at 128 MB
 target files, 100 TB is ~800k paths; JSON is fine at this round's scale
@@ -43,6 +50,7 @@ import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 # Format 2 (r10): manifests store data-file paths RELATIVE to the table
 # root, so a committed table can be relocated (or mounted at a different
@@ -117,7 +125,11 @@ def _read_manifest(path: str, version: int) -> dict:
 
 
 def _publish_manifest(
-    path: str, version: int, files: list[str], meta: dict | None = None
+    path: str,
+    version: int,
+    files: list[str],
+    meta: dict | None = None,
+    schema: dict | None = None,
 ) -> None:
     """Atomic manifest publication: temp file + os.replace. Refuses to
     overwrite an existing version (single-writer contract — a lost race
@@ -137,6 +149,7 @@ def _publish_manifest(
                     "version": version,
                     "files": sorted(files),
                     "meta": meta or {},
+                    "schema": schema,
                 },
                 f,
             )
@@ -191,6 +204,31 @@ def snapshot_file_count(path: str, version: int | None = None) -> int:
     return len(_read_manifest(path, version)["files"])
 
 
+def _nullable_json(schema_json):
+    """A schema's JSON with every field, element and value nullable — the
+    schema a parquet read of the committed files returns."""
+    if isinstance(schema_json, list):
+        return [_nullable_json(v) for v in schema_json]
+    if not isinstance(schema_json, dict):
+        return schema_json
+    return {
+        k: True
+        if k in ("nullable", "containsNull", "valueContainsNull")
+        else (v if k == "metadata" else _nullable_json(v))
+        for k, v in schema_json.items()
+    }
+
+
+def _scan(spark: SparkSession, path: str, version: int) -> DataFrame:
+    """A version's files, read with the manifest's recorded schema when
+    it has one (no inference job), else with inference."""
+    m = _read_manifest(path, version)
+    files = [_resolve_file(path, e) for e in m["files"]]
+    if m.get("schema") is None:
+        return spark.read.parquet(*files)
+    return spark.read.schema(T.StructType.fromJson(m["schema"])).parquet(*files)
+
+
 def _data_files(data_dir: str) -> list[str]:
     return [
         os.path.join(data_dir, n)
@@ -229,12 +267,16 @@ def commit_snapshot(
         os.path.relpath(f, root)
         for f in _data_files(os.path.abspath(data_dir))
     ]
+    schema = _nullable_json(df.schema.jsonValue())
     if mode == "append" and versions:
         # Carry prior entries AS STORED (a legacy-absolute entry stays
         # absolute; rewriting it relative would break if it points
         # outside the table root).
-        files += _read_manifest(path, versions[-1])["files"]
-    _publish_manifest(path, version, files, meta)
+        prev = _read_manifest(path, versions[-1])
+        files += prev["files"]
+        if prev.get("schema") != schema:
+            schema = None  # mixed or unknown file schemas: readers infer
+    _publish_manifest(path, version, files, meta, schema)
     return version
 
 
@@ -251,7 +293,7 @@ def read_snapshot(
         version = versions[-1]
     if version not in versions:
         raise ValueError(f"version {version} not in {versions}")
-    return spark.read.parquet(*_manifest_files(path, version))
+    return _scan(spark, path, version)
 
 
 def compact_snapshots(
@@ -315,7 +357,7 @@ def compact_snapshots(
             "files_before": len(files),
             "files_after": len(files),
         }
-    df = spark.read.parquet(*files).repartition(n_out)
+    df = _scan(spark, path, version).repartition(n_out)
     new_version = commit_snapshot(
         df,
         path,

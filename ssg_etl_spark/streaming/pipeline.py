@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from ssg_etl_spark.operators.merge import merge_upsert
 from ssg_etl_spark.operators.rollups import DEC
 from ssg_etl_spark.schemas import EVENTS
+from ssg_etl_spark.session import local_frame
 from ssg_etl_spark.sources import versioning
 
 
@@ -457,7 +458,8 @@ def foreach_batch_span_dedup(index_path: str, out_path: str, chunk_words: int = 
         if os.path.exists(index_path):
             index = spark.read.parquet(index_path)
         else:
-            index = spark.createDataFrame(
+            index = local_frame(
+                spark,
                 [],
                 "chunk_hash string, canon_doc_id long, "
                 "canon_chunk_id int, n_occurrences bigint",
@@ -612,7 +614,7 @@ def _fold_sink(
             finally:
                 merged.unpersist()
         _commit_batch(
-            spark.createDataFrame(rows, merged.schema).coalesce(1),
+            local_frame(spark, rows, merged.schema).coalesce(1),
             path,
             batch_id,
             prev,
@@ -1135,7 +1137,8 @@ def foreach_batch_ge_checkpoint_gate(
                                 int(batch_id),
                             )
                         )
-                audit = batch.sparkSession.createDataFrame(
+                audit = local_frame(
+                    batch.sparkSession,
                     rows,
                     "checkpoint string, suite string, expectation string, "
                     "passed boolean, metrics string, batch_id long",

@@ -1472,6 +1472,37 @@ def test_null_payload_yields_null_row(spark, stage):
     assert good and all(r[c] is not None for r in good for c in ints)
 
 
+_ENCODERS = (
+    "ppm_assets_from_documents",
+    "png_assets_from_documents",
+    "jpeg_assets_from_documents",
+    "wav_assets_from_documents",
+    "y4m_assets_from_documents",
+    "mp3_assets_from_documents",
+    "mp4_assets_from_documents",
+    "mixed_image_assets_from_documents",
+)
+
+
+@pytest.mark.parametrize("encoder", _ENCODERS)
+def test_null_text_follows_one_encode_rule(spark, encoder):
+    """Every encoder treats a NULL ``text`` the same way: the document
+    keeps its asset row, with a NULL payload wherever the encoder reads
+    ``text`` (the wav encoder reads ``doc_id`` only and encodes it as
+    usual), and the same row with text gets a payload."""
+    docs = spark.createDataFrame(
+        [(4, None), (5, "some text")], "doc_id long, text string"
+    )
+    rows = {r.asset_id: r for r in getattr(MM, encoder)(docs).collect()}
+    assert sorted(rows) == [4, 5]
+    assert rows[5].payload
+    if encoder == "wav_assets_from_documents":
+        assert rows[4].payload
+    else:
+        assert rows[4].payload is None, rows[4]
+    assert rows[4].media_type == rows[5].media_type
+
+
 def test_codec_stages_share_one_python_batch_boundary():
     """AST lint: the module has exactly one ``mapInPandas`` call and one
     ``fan_out`` call, both inside ``_map_rows``, so a new codec stage

@@ -588,3 +588,60 @@ def test_load_table_never_mutates_embedder_session_zone(spark, sf_dir):
     finally:
         spark.conf.set("spark.ssg_etl_spark.engineSession", "true")
         spark.conf.set("spark.sql.session.timeZone", prev_zone)
+
+
+def test_declared_batch_schemas_match_testdata_footers(spark, sf_dir):
+    """ROADMAP item 2: every ``TESTDATA_BATCH`` schema equals the parquet
+    footer of its table (as Spark's own inference reads it) at every
+    scale factor under the testdata root — the declared schema is the
+    one ``load_table`` scans with, so drift would change results."""
+    import glob
+
+    from ssg_etl_spark.schemas import TESTDATA_BATCH
+
+    roots = sorted(glob.glob(os.path.join(os.path.dirname(sf_dir), "sf*")))
+    assert roots
+    for root in roots:
+        for name, declared in TESTDATA_BATCH.items():
+            on_disk = spark.read.parquet(os.path.join(root, f"{name}.parquet"))
+            assert on_disk.schema == declared, (root, name, on_disk.schema)
+
+
+def test_load_table_resolves_without_a_job(spark, sf_dir):
+    """A declared-schema scan lists files but starts no Spark job (an
+    inferred parquet scan starts one), and hands out NTZ timestamps."""
+    from ssg_etl_spark.sources.tables import TABLE_NAMES, load_table
+
+    sc = spark.sparkContext
+    group = "load-table-resolve"
+    sc.setJobGroup(group, "resolve")
+    try:
+        dtypes = {n: dict(load_table(spark, sf_dir, n).dtypes) for n in TABLE_NAMES}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert dtypes["events"]["ts"] == "timestamp_ntz"
+    assert dtypes["orders"]["o_orderdate"] == "timestamp_ntz"
+
+
+def test_load_table_events_nanos_fallback(spark, sf_dir, tmp_path):
+    """An events file written with TIMESTAMP(NANOS) still loads: ``ts``
+    comes back as NTZ truncated to microseconds, equal to the micros
+    file's values."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from ssg_etl_spark.sources.tables import load_table
+
+    t = pq.read_table(os.path.join(sf_dir, "events.parquet"))
+    i = t.schema.get_field_index("ts")
+    nanos = pc.add(t.column("ts").cast(pa.timestamp("ns")), pa.scalar(789, pa.duration("ns")))
+    pq.write_table(
+        t.set_column(i, "ts", nanos), str(tmp_path / "events.parquet")
+    )
+    got = load_table(spark, str(tmp_path), "events")
+    want = load_table(spark, sf_dir, "events")
+    assert got.schema == want.schema
+    assert sorted(got.collect()) == sorted(want.collect())

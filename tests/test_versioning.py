@@ -318,3 +318,108 @@ def test_legacy_absolute_manifest_still_reads(spark, snap_dir):
         json.dump(bad, f)
     with pytest.raises(ValueError, match="unsupported manifest format"):
         V.read_snapshot(spark, snap_dir, version=1)
+
+
+def _typed_df(spark, lo, hi):
+    import datetime as dt
+    import decimal
+
+    return spark.createDataFrame(
+        [
+            (
+                i,
+                dt.datetime(2024, 1, 1, 0, 0, i % 60),
+                decimal.Decimal(i) / 100,
+                [f"t{i}", None],
+            )
+            for i in range(lo, hi)
+        ],
+        "id long, ts timestamp_ntz, amt decimal(10,2), tags array<string>",
+    )
+
+
+def _resolve_jobs(spark, fn):
+    """Spark jobs started while ``fn`` runs (a schema-inference scan
+    starts one)."""
+    sc = spark.sparkContext
+    group = f"resolve-{id(fn)}"
+    sc.setJobGroup(group, "resolve")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_manifest_schema_round_trip(spark, snap_dir):
+    """A commit records its schema (NTZ, decimal and array types, every
+    field nullable) and a read resolves with it: same schema, same rows,
+    no schema-inference job."""
+    from pyspark.sql import types as T
+
+    df = _typed_df(spark, 0, 30)
+    V.commit_snapshot(df, snap_dir)
+    recorded = T.StructType.fromJson(V._read_manifest(snap_dir, 1)["schema"])
+    assert recorded.simpleString() == (
+        "struct<id:bigint,ts:timestamp_ntz,amt:decimal(10,2),tags:array<string>>"
+    )
+    assert all(f.nullable for f in recorded.fields)
+    assert _resolve_jobs(spark, lambda: V.read_snapshot(spark, snap_dir).schema) == []
+    got = V.read_snapshot(spark, snap_dir)
+    assert got.schema == recorded
+    assert sorted(got.collect()) == sorted(df.collect())
+
+
+def test_manifest_without_schema_reads_by_inference(spark, snap_dir):
+    """A manifest written before the schema field existed still reads
+    (by inference), and an append on top of it records no schema."""
+    import json
+
+    V.commit_snapshot(_typed_df(spark, 0, 10), snap_dir)
+    m = V._read_manifest(snap_dir, 1)
+    del m["schema"]
+    with open(V._manifest_path(snap_dir, 1), "w") as f:
+        json.dump(m, f)
+    got = V.read_snapshot(spark, snap_dir)
+    assert sorted(got.collect()) == sorted(_typed_df(spark, 0, 10).collect())
+    V.commit_snapshot(_typed_df(spark, 10, 20), snap_dir)
+    assert V._read_manifest(snap_dir, 2)["schema"] is None
+    assert V.read_snapshot(spark, snap_dir).count() == 20
+
+
+def test_append_with_a_new_schema_records_none(spark, snap_dir):
+    """An append whose schema differs from the previous version's keeps
+    the inference read: the new manifest records no schema, and an append
+    whose schema matches (nullability aside) keeps the recorded one."""
+    from pyspark.sql import functions as F
+
+    V.commit_snapshot(_df(spark, 0, 10), snap_dir)
+    same = _df(spark, 10, 20).withColumn("id", F.coalesce("id", F.lit(0)))
+    assert not same.schema["id"].nullable
+    V.commit_snapshot(same, snap_dir)
+    assert V._read_manifest(snap_dir, 2)["schema"] == V._read_manifest(
+        snap_dir, 1
+    )["schema"]
+    V.commit_snapshot(_df(spark, 20, 30).withColumn("note", F.lit("n")), snap_dir)
+    assert V._read_manifest(snap_dir, 3)["schema"] is None
+    got = V.read_snapshot(spark, snap_dir)
+    assert {r.id for r in got.collect()} == set(range(30))
+    assert {r.id for r in V.read_snapshot(spark, snap_dir, version=2).collect()} == set(
+        range(20)
+    )
+
+
+def test_compaction_carries_the_schema_forward(spark, snap_dir):
+    """``compact_snapshots`` reads the version with its recorded schema
+    and the compacted version records the same schema."""
+    for lo in range(0, 40, 10):
+        V.commit_snapshot(_typed_df(spark, lo, lo + 10), snap_dir)
+    before = V._read_manifest(snap_dir, 4)["schema"]
+    assert before is not None
+    stats = V.compact_snapshots(spark, snap_dir, target_file_bytes=1 << 30)
+    assert stats["compacted"] and stats["version"] == 5
+    assert V._read_manifest(snap_dir, 5)["schema"] == before
+    assert sorted(V.read_snapshot(spark, snap_dir).collect()) == sorted(
+        _typed_df(spark, 0, 40).collect()
+    )
