@@ -9,16 +9,18 @@ batch merge into the target by addition — exact for decomposable aggregates
 (sum/count), so the target equals a from-scratch batch rollup after any
 sequence of runs (`tests/test_pipeline.py` pins this invariant).
 
-Exactly-once across crashes: a staged-commit protocol. The merged target is
-written to a staging directory, then a commit marker (atomic rename) makes
-the run durable, then staging swaps into place and the audit-log row is
-appended; `_recover` finishes any interrupted run at the next start. A
-crash at ANY point either leaves the watermark unadvanced (batch replays
-into an untouched target) or completes on recovery — never a double-count.
-The audit row is built once per run, as a Python dict (one aggregate job
-over the batch): the commit marker records it and the log append writes
-it through ``session.local_frame``, so no Python worker runs and nothing
-reads the row back from Spark.
+Exactly-once across crashes: the merged target commits through
+``sources.sinks.commit_directory``, and its commit record carries the
+run's audit row — the target and the watermark commit together, and the
+next run reads the watermark from the record without a Spark job. After
+the swap the audit row lands as ``log/<run id>.parquet`` (pyarrow, atomic
+rename); a start that finds it missing writes it from the record. A crash
+at ANY point leaves either no record (the batch replays into the
+untouched target) or a record whose commit recovery completes — never a
+double-count.
+A target without a record was left by the earlier marker protocol after a
+clean run: its watermark is read once from the log; that protocol's
+crash leftover ``_commit.json`` raises ``LegacyCommitError``.
 The swap uses local-FS rename; on HDFS/S3 swap this layer for a
 transactional table format (Delta/Iceberg MERGE), keeping the same logic.
 
@@ -34,9 +36,7 @@ types), not fact-sized.
 from __future__ import annotations
 
 import datetime as dt
-import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -45,18 +45,16 @@ from pyspark.sql import types as T
 from ssg_etl_spark.operators import incremental as inc
 from ssg_etl_spark.operators.rollups import rollup_date_type
 from ssg_etl_spark.schemas import ETL_LOG
-from ssg_etl_spark.session import local_frame
+from ssg_etl_spark.session import arrow_table
+from ssg_etl_spark.sources import sinks
 
 SOURCE_NAME = "events_rollup"
+# ETL_LOG's timestamp fields, ISO strings in the target's commit record.
+_TS = {f.name for f in ETL_LOG.fields if f.dataType.typeName().startswith("timestamp")}
 
 
-def _paths(state_dir: str) -> dict[str, str]:
-    return {
-        "log": os.path.join(state_dir, "log"),
-        "target": os.path.join(state_dir, "target"),
-        "staging": os.path.join(state_dir, "target__staging"),
-        "marker": os.path.join(state_dir, "_commit.json"),
-    }
+class LegacyCommitError(RuntimeError):
+    """A ``_commit.json`` left by a crash of the earlier marker protocol."""
 
 
 def _read_or_none(
@@ -95,57 +93,24 @@ def merge_additive(
     return merged.select(*key_cols, *val_cols)
 
 
-def _write_marker(marker_path: str, payload: dict) -> None:
-    tmp = marker_path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(payload, f)
-    os.rename(tmp, marker_path)  # atomic on POSIX: this IS the commit point
+def _land_audit_row(log_dir: str, row: dict) -> None:
+    """The run's audit row as ``log/<run id>.parquet``, unless it is there."""
+    dest = os.path.join(log_dir, f"{row['process_log_id']}.parquet")
+    if os.path.exists(dest):
+        return
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    os.makedirs(log_dir, exist_ok=True)
+    buf = pa.BufferOutputStream()
+    pq.write_table(arrow_table([row], ETL_LOG), buf)
+    sinks.replace_file(dest, buf.getvalue().to_pybytes())
 
 
-def _log_has_run(spark: SparkSession, log_path: str, run_id: str) -> bool:
-    log = _read_or_none(spark, log_path, ETL_LOG)
-    if log is None:
-        return False
-    return log.filter(F.col("process_log_id") == run_id).limit(1).count() > 0
-
-
-def _publish(spark: SparkSession, p: dict[str, str], log_row: dict | None) -> None:
-    """Swap staging → target and append the audit row (an ``ETL_LOG``
-    dict); safe to re-run."""
-    if os.path.exists(p["staging"]):
-        if os.path.exists(p["target"]):
-            shutil.rmtree(p["target"])
-        os.rename(p["staging"], p["target"])
-    if log_row is not None:
-        local_frame(spark, [log_row], ETL_LOG).write.mode("append").parquet(p["log"])
-    os.remove(p["marker"])
-
-
-def _recover(spark: SparkSession, p: dict[str, str]) -> None:
-    """Finish (or discard) whatever a crashed previous run left behind."""
-    if os.path.exists(p["marker"]):
-        with open(p["marker"]) as f:
-            committed = json.load(f)
-        run_id = committed["run_id"]
-        if _log_has_run(spark, p["log"], run_id):
-            # Swap + log landed; only the marker removal was lost.
-            _publish(spark, p, None)
-        else:
-            raw = committed["log_row"]
-            parsed = {
-                f.name: (
-                    dt.datetime.fromisoformat(raw[f.name])
-                    # startswith: matches TIMESTAMP and TIMESTAMP_NTZ (the
-                    # audit log's type since the round-8 NTZ contract).
-                    if raw.get(f.name) is not None
-                    and f.dataType.typeName().startswith("timestamp")
-                    else raw.get(f.name)
-                )
-                for f in ETL_LOG.fields
-            }
-            _publish(spark, p, parsed)
-    elif os.path.exists(p["staging"]):
-        shutil.rmtree(p["staging"])  # un-committed staging: discard
+def _committed_row(record: dict) -> dict:
+    """The audit row a target record carries, timestamps parsed back."""
+    return {k: dt.datetime.fromisoformat(v) if k in _TS and v else v
+            for k, v in record.items()}
 
 
 def run_events_rollup_once(
@@ -163,7 +128,6 @@ def run_events_rollup_once(
     channel is the ingest-side hook) — the from-scratch-equality invariant
     is over rows with event time.
     """
-    p = _paths(state_dir)
     os.makedirs(state_dir, exist_ok=True)
 
     # Single-writer guard: overlapping scheduled runs would double-count the
@@ -199,7 +163,7 @@ def run_events_rollup_once(
         except FileExistsError:
             return {"extracted": 0, "skipped": True, "reason": "lock contention"}
     try:
-        return _run_locked(spark, events, p, started_at)
+        return _run_locked(spark, events, state_dir, started_at)
     finally:
         try:
             os.remove(lock)
@@ -210,16 +174,28 @@ def run_events_rollup_once(
 def _run_locked(
     spark: SparkSession,
     events: DataFrame,
-    p: dict[str, str],
+    state_dir: str,
     started_at: dt.datetime | None,
 ) -> dict:
-    _recover(spark, p)
+    legacy = os.path.join(state_dir, "_commit.json")
+    if os.path.exists(legacy):
+        raise LegacyCommitError(
+            f"{legacy}: a run of the earlier commit protocol crashed after "
+            "its commit; finish it with that version, or delete this file "
+            "and target__staging to replay the batch"
+        )
+    target = os.path.join(state_dir, "target")
+    log_dir = os.path.join(state_dir, "log")
+    sinks.recover_directory(target)
+    committed = sinks.directory_record(target)
+    if committed is None:  # fresh state, or a target the earlier protocol wrote
+        log = _read_or_none(spark, log_dir, ETL_LOG)
+        wm = None if log is None else inc.get_watermark(log, SOURCE_NAME)
+    else:
+        last = _committed_row(committed["audit_row"])
+        _land_audit_row(log_dir, last)  # the swap landed, the row may not have
+        wm = last["last_extract_ts"]
 
-    log = _read_or_none(spark, p["log"], ETL_LOG)
-    if log is None:
-        log = inc.empty_log(spark)
-
-    wm = inc.get_watermark(log, SOURCE_NAME)
     if wm is not None and not inc.has_new_data(events, "ts", wm):
         return {"extracted": 0, "skipped": True}  # M4 gate: nothing new
 
@@ -231,17 +207,12 @@ def _run_locked(
     try:
         log_row = inc.audit_row(SOURCE_NAME, batch, "ts", started)
         delta = rollup_date_type(batch)
-        target = _read_or_none(spark, p["target"], delta.schema)
+        old = _read_or_none(spark, target, delta.schema)
         merged = merge_additive(
-            target, delta, ["event_date", "event_type"], ["total_value", "n_events"]
+            old, delta, ["event_date", "event_type"], ["total_value", "n_events"]
         )
-        merged.write.mode("overwrite").parquet(p["staging"])  # 1) stage
-        marker_row = {
-            k: (v.isoformat() if isinstance(v, dt.datetime) else v)
-            for k, v in log_row.items()
-        }
-        _write_marker(p["marker"], {"run_id": log_row["process_log_id"], "log_row": marker_row})  # 2) commit
-        _publish(spark, p, log_row)  # 3) swap + audit append + marker removal
+        sinks.commit_directory(merged.write, target, {"audit_row": log_row})
+        _land_audit_row(log_dir, log_row)
         return {"extracted": log_row["rows_extracted"], "skipped": False}
     finally:
         batch.unpersist()

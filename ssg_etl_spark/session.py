@@ -133,19 +133,27 @@ def local_frame(spark: SparkSession, rows, schema):
     turns Python rows into Spark rows.
 
     ``rows`` are tuples, ``Row`` objects or dicts; ``schema`` a
-    ``StructType`` or DDL string. The rows travel as one Arrow table, so
-    the frame is a JVM local relation (below Spark's
+    ``StructType`` or DDL string. The rows travel as one Arrow table
+    (``arrow_table``), so the frame is a JVM local relation (below Spark's
     ``arrow.localRelationThreshold``, 48 MB by default): no Python worker
     ever runs for it, ``first()``/``collect()`` start no Spark job, its
     statistics are exact (so joins can broadcast it), and a one-row frame
     writes one file. Values mean what they meant to ``createDataFrame``
     on Python rows (see ``_arrow_value``)."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import StructType, _parse_datatype_string
 
     if not isinstance(schema, StructType):
         schema = _parse_datatype_string(schema)
+    return spark.createDataFrame(arrow_table(rows, schema), schema)
+
+
+def arrow_table(rows, schema):
+    """``rows`` (tuples, ``Row`` objects or dicts) as a ``pyarrow.Table``
+    of the ``StructType`` ``schema`` — ``local_frame``'s payload, also
+    written to parquet directly where no Spark job is wanted."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
     arrow_schema = to_arrow_schema(schema)
     convs = [_arrow_value(f.dataType) for f in schema.fields]
     cols = [[] for _ in convs]
@@ -155,8 +163,7 @@ def local_frame(spark: SparkSession, rows, schema):
         values = [row.get(n) for n in schema.names] if isinstance(row, dict) else row
         for col, conv, v in zip(cols, convs, values):
             col.append(conv(v) if conv else v)
-    table = pa.Table.from_arrays(
+    return pa.Table.from_arrays(
         [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
         schema=arrow_schema,
     )
-    return spark.createDataFrame(table, schema)

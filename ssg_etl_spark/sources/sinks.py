@@ -18,11 +18,19 @@ Scale design (the part that matters at 100 TB):
 * **Modified-timestamp stamping** replaces the reference's AFTER-UPDATE
   triggers (dltproject/sql scripts/create trigger.sql:12-22, J11): the
   engine has no in-place update, so the stamp happens on the write path.
+* **Directory commit** — every rewrite of a plain parquet directory (the
+  ERP rollup target, the CDC upsert target, the span-dedup index,
+  compaction) commits through ``commit_directory``: one rename-only swap
+  whose every crash state ``recover_directory`` resolves.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import json
+import os
+import shutil
+
+from pyspark.sql import DataFrame, DataFrameWriter, SparkSession
 from pyspark.sql import functions as F
 
 from ssg_etl_spark.session import local_frame
@@ -80,6 +88,82 @@ def write_partitioned(
     writer.parquet(path)
 
 
+_RECORD = "_record.json"  # "_": parquet readers skip it as metadata
+
+
+def replace_file(path: str, data: bytes) -> None:
+    """Publish one file atomically: write a hidden temp file beside
+    ``path``, then ``os.replace`` it in — a reader sees all of it or
+    nothing."""
+    head, tail = os.path.split(path)
+    tmp = os.path.join(head, f".{tail}.tmp")
+    with open(tmp, "wb") as f:
+        f.write(data)
+    os.replace(tmp, path)
+
+
+def directory_record(path: str) -> dict | None:
+    """The record ``commit_directory`` committed with ``path``, or None —
+    a file read, no Spark job."""
+    try:
+        with open(os.path.join(path.rstrip("/"), _RECORD)) as f:
+            return json.load(f)
+    except FileNotFoundError:
+        return None
+
+
+def _swap(path: str) -> None:
+    """Renames only: target aside → stage in → aside copy removed."""
+    stage, aside = path + "__staging", path + "__old"
+    if os.path.exists(path):
+        os.rename(path, aside)
+    os.rename(stage, path)
+    if os.path.exists(aside):
+        shutil.rmtree(aside)
+
+
+def commit_directory(
+    writer: DataFrameWriter, path: str, record: dict | None = None
+) -> None:
+    """Replace the parquet directory ``path`` with ``writer``'s output:
+    ``writer`` fills ``<path>__staging`` (its plan may read ``path``),
+    the JSON ``record`` lands in the stage as ``_record.json`` — the
+    commit point — and ``_swap`` renames it in. ``path`` is never
+    half-deleted, and ``recover_directory`` (which callers run before
+    reading ``path``) resolves any crash to exactly the last commit.
+    ``record`` travels with the data (the ERP watermark, the span index's
+    batch id); ``directory_record`` reads it. Local-FS renames; on an
+    object store use a transactional table format instead.
+    """
+    path = path.rstrip("/")
+    stage = path + "__staging"
+    writer.mode("overwrite").parquet(stage)
+    rec = json.dumps(record or {}, default=lambda v: v.isoformat())  # datetimes
+    replace_file(os.path.join(stage, _RECORD), rec.encode())
+    _swap(path)
+
+
+def recover_directory(path: str) -> None:
+    """Resolve what a crashed ``commit_directory`` left beside ``path``
+    (a no-op on a clean layout). The swap only renames, so each layout
+    names the crash point: a stage without its record never committed
+    (discarded, however partial); a stage with it did (the swap is
+    finished); aside + target means only the cleanup was lost (aside
+    dropped); aside alone means the target vanished (aside restored).
+    """
+    path = path.rstrip("/")
+    stage, aside = path + "__staging", path + "__old"
+    if os.path.exists(stage) and directory_record(stage) is None:
+        shutil.rmtree(stage)
+    if os.path.exists(aside):
+        if os.path.exists(path):
+            shutil.rmtree(aside)
+        elif not os.path.exists(stage):
+            os.rename(aside, path)
+    if os.path.exists(stage):
+        _swap(path)
+
+
 def compact_parquet(
     spark: SparkSession,
     path: str,
@@ -101,48 +185,20 @@ def compact_parquet(
     each value into exactly one task → one file per directory regardless
     of size). Returns the number of data files actually written.
 
-    The swap is RENAME-ONLY (write staging → rename target aside → rename
-    staging in → remove the old copy), so the live dataset is never in a
-    half-deleted state and every crash leaves an unambiguous layout the
-    next run repairs. Local-FS only — on an object store use a
-    transactional table format's OPTIMIZE/rewrite instead (this guard
-    raises rather than funneling a remote dataset through one task).
+    The rewrite commits through ``commit_directory`` (rename-only swap),
+    and a crashed earlier compaction is resolved by ``recover_directory``
+    first, so the live dataset is never half-deleted. Local-FS only — on
+    an object store use a transactional table format's OPTIMIZE/rewrite
+    instead (this guard raises rather than funneling a remote dataset
+    through one task).
     """
-    import os
-    import shutil
-
     if "://" in path:
         raise ValueError(
             "compact_parquet sizes and swaps via the local filesystem; for "
             f"remote storage ({path!r}) use the table format's compaction"
         )
-    base = path.rstrip("/")
-    staging = base + "__compact"
-    old = base + "__old"
-
-    # Crash recovery. Because the swap below only renames, each on-disk
-    # combination identifies where a previous run died:
-    #   old + target          → after the swap, before cleanup: drop old.
-    #   old + staging, no tgt → between the two renames: finish the swap.
-    #   old only              → target vanished externally after the swap
-    #                           machinery started; restore the original.
-    #   staging + target      → before the swap began: target is intact by
-    #                           construction (it is never partially
-    #                           deleted), so staging is safe to discard.
-    #   staging, no target    → legacy interrupted swap: promote staging.
-    if os.path.exists(old):
-        if os.path.exists(path):
-            shutil.rmtree(old)
-        elif os.path.exists(staging):
-            os.rename(staging, path)
-            shutil.rmtree(old)
-        else:
-            os.rename(old, path)
-    if os.path.exists(staging):
-        if os.path.exists(path):
-            shutil.rmtree(staging)
-        else:
-            os.rename(staging, path)
+    path = path.rstrip("/")
+    recover_directory(path)
 
     def dir_bytes(d: str) -> int:
         t = 0
@@ -184,8 +240,7 @@ def compact_parquet(
 
     if not part_cols:
         n_target = max(1, -(-dir_bytes(path) // target_file_bytes))  # ceil
-        arranged = df.repartition(n_target)
-        writer = arranged.write.mode("overwrite")
+        writer = df.repartition(n_target).write
     else:
         # Per-leaf-partition sizes → per-partition salt bounds. The walk
         # visits exactly len(part_cols) levels of key=value directories.
@@ -226,14 +281,10 @@ def compact_parquet(
             .repartition(n_total, *[F.col(c) for c in part_cols], F.col("_salt"))
             .drop("_n_salts", "_salt")
         )
-        writer = arranged.write.mode("overwrite").partitionBy(*part_cols)
+        writer = arranged.write.partitionBy(*part_cols)
 
-    writer.parquet(staging)
-    n_written = data_file_count(staging)
-    os.rename(path, old)
-    os.rename(staging, path)
-    shutil.rmtree(old)
-    return n_written
+    commit_directory(writer, path)
+    return data_file_count(path)
 
 
 def write_bucketed(

@@ -25,7 +25,7 @@ from ssg_etl_spark.operators.merge import merge_upsert
 from ssg_etl_spark.operators.rollups import DEC
 from ssg_etl_spark.schemas import EVENTS
 from ssg_etl_spark.session import local_frame
-from ssg_etl_spark.sources import versioning
+from ssg_etl_spark.sources import sinks, versioning
 
 
 def events_file_stream(
@@ -254,28 +254,17 @@ def foreach_batch_upsert(target_path: str, keys: list[str], seq_col: str | None 
     deterministically; without it, an arbitrary row per key is kept — pass
     ``seq_col`` whenever a batch can hold several changes for one key.
     The reduced batch is merged (join-rewrite, operators/merge.merge_upsert)
-    into the target and atomically rewritten. Idempotent per batch."""
-
-    staging_path = target_path.rstrip("/") + "__staging"
+    into the target and rewritten through ``sinks.commit_directory``,
+    whose recovery runs first, so a crash anywhere in an earlier apply
+    leaves exactly its last committed target. Idempotent per batch."""
 
     def apply(batch: DataFrame, batch_id: int) -> None:
         import os
-        import shutil
 
-        from pyspark.errors import AnalysisException
         from pyspark.sql.window import Window
 
         spark = batch.sparkSession
-        # Crash recovery: a previous apply may have died mid-swap. Completed
-        # staging with missing target → finish the swap; stale staging next
-        # to an intact target → discard and recompute. (Local-FS rename; on
-        # HDFS/S3 use a transactional table format for this step instead.)
-        if os.path.exists(staging_path):
-            if os.path.exists(target_path):
-                shutil.rmtree(staging_path)
-            else:
-                os.rename(staging_path, target_path)
-
+        sinks.recover_directory(target_path)
         if seq_col is not None:
             w = Window.partitionBy(*keys).orderBy(F.desc(seq_col))
             latest = (
@@ -285,28 +274,15 @@ def foreach_batch_upsert(target_path: str, keys: list[str], seq_col: str | None 
             )
         else:
             latest = batch.dropDuplicates(keys)
-        try:
-            target = spark.read.parquet(target_path)
-        except AnalysisException as exc:
-            # Only a genuinely-missing target means "first batch"; any other
-            # failure must propagate — falling through would overwrite the
-            # target with this batch alone and silently lose history.
-            if "PATH_NOT_FOUND" not in str(exc) and "Path does not exist" not in str(exc):
-                raise
-            target = None
+        # Recovered, so only a missing target means "first batch"; a read
+        # failure of an existing one propagates (never overwrite history).
+        target = spark.read.parquet(target_path) if os.path.exists(target_path) else None
         merged = (
             latest
             if target is None
             else merge_upsert(target, latest.select(*target.columns), keys)
         )
-        # Stage-then-swap: writing to a sibling path keeps the plan's input
-        # (target_path) intact while it is being read, and the rename swap
-        # means a crash can never leave the target half-written or missing
-        # without a completed staging copy beside it.
-        merged.write.mode("overwrite").parquet(staging_path)
-        if os.path.exists(target_path):
-            shutil.rmtree(target_path)
-        os.rename(staging_path, target_path)
+        sinks.commit_directory(merged.write, target_path)
 
     return apply
 
@@ -406,8 +382,8 @@ def foreach_batch_span_dedup(index_path: str, out_path: str, chunk_words: int = 
     """Streaming span dedup with an EVOLVING chunk-digest index: each
     micro-batch is probed against the index-so-far (first-seen-wins across
     batches), its per-chunk keep/drop decisions append to ``out_path``,
-    and the index folds forward via ``merge_chunk_index`` with the same
-    stage-then-swap parquet rewrite as ``foreach_batch_upsert``. Unlike
+    and the index folds forward via ``merge_chunk_index``, committed
+    through ``sinks.commit_directory`` as in ``foreach_batch_upsert``. Unlike
     ``foreach_batch_incremental_dedup`` (static base), the reference set
     here GROWS: a span first seen in batch 3 dedups batch 7.
 
@@ -422,10 +398,10 @@ def foreach_batch_span_dedup(index_path: str, out_path: str, chunk_words: int = 
     partition instead of appending duplicate/contradictory rows. The
     remaining hazard — replaying AFTER the index swap, where the batch's
     own chunks are already in the index and every keep decision would
-    flip to drop — is closed by an atomic batch marker: a ``_batch_<id>``
-    file written into the staged index BEFORE the rename. Marker present
-    ⟹ the swap (and the output write, which precedes it) completed ⟹
-    the replay is a no-op. Marker absent ⟹ the index is pre-swap and
+    flip to drop — is closed by the index's commit record, which holds
+    the ``batch_id`` that committed it. Record has this batch id ⟹ the
+    commit (and the output write, which precedes it) completed ⟹ the
+    replay is a no-op. Otherwise the index is pre-commit and
     recomputation is bit-identical, overwriting the partition in place.
     """
     from ssg_etl_spark.cache import release_tracked, scope_token
@@ -435,24 +411,17 @@ def foreach_batch_span_dedup(index_path: str, out_path: str, chunk_words: int = 
         merge_chunk_index,
     )
 
-    staging_path = index_path.rstrip("/") + "__staging"
-
     def apply(batch: DataFrame, batch_id: int) -> None:
         import os
-        import shutil
 
         if batch.isEmpty():
             return
         tok = scope_token()
         spark = batch.sparkSession
-        if os.path.exists(staging_path):
-            if os.path.exists(index_path):
-                shutil.rmtree(staging_path)
-            else:
-                os.rename(staging_path, index_path)
-        if os.path.exists(os.path.join(index_path, f"_batch_{batch_id}")):
-            # Replay after a completed swap: output + index already hold
-            # this batch; recomputing against the post-swap index would
+        sinks.recover_directory(index_path)
+        if (sinks.directory_record(index_path) or {}).get("batch_id") == batch_id:
+            # Replay after a completed commit: output + index already hold
+            # this batch; recomputing against the post-commit index would
             # mark every chunk as a duplicate of itself.
             return
         if os.path.exists(index_path):
@@ -465,7 +434,7 @@ def foreach_batch_span_dedup(index_path: str, out_path: str, chunk_words: int = 
                 "canon_chunk_id int, n_occurrences bigint",
             )
         keep = chunk_keep_list_vs_index(batch, index, chunk_words=chunk_words)
-        # Materialize decisions BEFORE the index swap — both plans read the
+        # Materialize decisions BEFORE the index commit — both plans read the
         # pre-batch index from index_path. Dynamic overwrite of this
         # batch's partition only: idempotent under replay.
         (
@@ -480,13 +449,7 @@ def foreach_batch_span_dedup(index_path: str, out_path: str, chunk_words: int = 
             if index.isEmpty()
             else merge_chunk_index(index, batch, chunk_words=chunk_words)
         )
-        merged.write.mode("overwrite").parquet(staging_path)
-        # Underscore-prefixed: parquet readers ignore it as metadata. Lands
-        # atomically with the rename below.
-        open(os.path.join(staging_path, f"_batch_{batch_id}"), "w").close()
-        if os.path.exists(index_path):
-            shutil.rmtree(index_path)
-        os.rename(staging_path, index_path)
+        sinks.commit_directory(merged.write, index_path, {"batch_id": batch_id})
         release_tracked(since=tok)
 
     return apply

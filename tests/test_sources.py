@@ -3,14 +3,18 @@
 from __future__ import annotations
 
 import os
+import shutil
+from types import SimpleNamespace
 
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ssg_etl_spark.sources.files import read_csv, read_excel, read_json_lines
 from ssg_etl_spark.sources.generator import synthetic_transactions
 from ssg_etl_spark.sources.sinks import replicate_table, stamp_modified, write_partitioned
+from tests.conftest import COMMIT_CRASHES, InjectedCrash
 
 SCHEMA = T.StructType(
     [
@@ -403,43 +407,200 @@ def test_compact_parquet_sizes_each_partition(spark, tmp_path):
     assert spark.read.parquet(path).count() == before
 
 
-def test_compact_parquet_crash_recovery_states(spark, tmp_path):
-    """Every intermediate state of the rename-only swap repairs without
-    data loss — including the one the old flow lost rows in (complete
-    staging next to a target remnant mid-swap)."""
-    import os
-    import shutil
-
+def _compact_site(spark, root, sf_dir):
+    """A fragmented dataset; batch i is one ``compact_parquet`` of it,
+    which never changes its rows."""
     from ssg_etl_spark.sources.sinks import compact_parquet
 
-    path = str(tmp_path / "ds")
-    spark.range(0, 100).write.parquet(path)
-    want = set(range(100))
+    path = os.path.join(root, "ds")
+    spark.range(0, 100).repartition(4).write.parquet(path)
+    return SimpleNamespace(
+        path=path,
+        commit=lambda i: compact_parquet(spark, path),
+        state=lambda: frozenset(r.id for r in spark.read.parquet(path).collect()),
+        want=lambda ids: frozenset(range(100)),
+    )
 
-    # State: old + staging, no target (died between the two renames).
-    os.rename(path, path + "__old")
-    spark.range(0, 100).repartition(1).write.parquet(path + "__compact")
-    compact_parquet(spark, path)
-    assert {r.id for r in spark.read.parquet(path).collect()} == want
-    assert not os.path.exists(path + "__old")
-    assert not os.path.exists(path + "__compact")
 
-    # State: old + target (died before final cleanup) → old is dropped.
-    spark.range(0, 100).repartition(1).write.parquet(path + "__old")
-    compact_parquet(spark, path)
-    assert {r.id for r in spark.read.parquet(path).collect()} == want
-    assert not os.path.exists(path + "__old")
+def _upsert_site(spark, root, sf_dir):
+    """The CDC upsert sink; batch i upserts keys 4i..4i+5 (overlapping the
+    next batch) with value ``v<i>``."""
+    from ssg_etl_spark.streaming.pipeline import foreach_batch_upsert
 
-    # State: stale staging + INTACT target → staging discarded, rows kept.
-    spark.range(500, 510).write.parquet(path + "__compact")
-    compact_parquet(spark, path)
-    assert {r.id for r in spark.read.parquet(path).collect()} == want
+    path = os.path.join(root, "target")
+    apply = foreach_batch_upsert(path, keys=["k"])
 
-    # State: old only (target vanished externally) → original restored.
-    shutil.rmtree(path)
-    spark.range(0, 100).repartition(1).write.parquet(path + "__old")
-    compact_parquet(spark, path)
-    assert {r.id for r in spark.read.parquet(path).collect()} == want
+    def rows(i):
+        return [(k, f"v{i}") for k in range(4 * i, 4 * i + 6)]
+
+    def want(ids):
+        out = {}
+        for i in sorted(ids):
+            out.update(rows(i))
+        return frozenset(out.items())
+
+    return SimpleNamespace(
+        path=path,
+        commit=lambda i: apply(spark.createDataFrame(rows(i), "k long, v string"), i),
+        state=lambda: frozenset((r.k, r.v) for r in spark.read.parquet(path).collect()),
+        want=want,
+    )
+
+
+def _span_dedup_site(spark, root, sf_dir):
+    """The streaming span-dedup index; batch i is one document (id i+1) of
+    a shared boilerplate chunk plus a chunk of its own. The index must
+    equal the batch-built index of the committed documents."""
+    from functools import reduce
+
+    from ssg_etl_spark.operators.dedup import build_chunk_index
+    from ssg_etl_spark.streaming.pipeline import foreach_batch_span_dedup
+
+    path = os.path.join(root, "idx")
+    apply = foreach_batch_span_dedup(path, os.path.join(root, "keeps"))
+    boiler = " ".join(f"b{j}" for j in range(16))
+
+    def docs(i):
+        text = boiler + " " + " ".join(f"w{i}_{j}" for j in range(16))
+        return spark.createDataFrame([(i + 1, text)], "doc_id long, text string")
+
+    def rows(df):
+        return frozenset(tuple(r) for r in df.collect())
+
+    return SimpleNamespace(
+        path=path,
+        commit=lambda i: apply(docs(i), i),
+        state=lambda: rows(spark.read.parquet(path)),
+        want=lambda ids: rows(
+            build_chunk_index(reduce(DataFrame.unionByName, map(docs, sorted(ids))))
+        ),
+    )
+
+
+def _erp_site(spark, root, sf_dir):
+    """The ERP events rollup; batch i runs the pipeline over the events up
+    to the i-th cut. The target must equal the rollup of everything up to
+    the last committed cut, with one audit row per committed run."""
+    from ssg_etl_spark.operators.rollups import rollup_date_type
+    from ssg_etl_spark.pipelines import run_events_rollup_once
+    from ssg_etl_spark.sources.tables import load_table
+
+    state = os.path.join(root, "state")
+    events = load_table(spark, sf_dir, "events")
+    cuts = events.selectExpr("percentile_approx(ts, array(0.3, 0.6, 1.0)) p").first().p
+
+    def seen(i):
+        return events.filter(F.col("ts") <= cuts[i])
+
+    def rollup(df):
+        return frozenset(
+            ((r.event_date, r.event_type), (round(r.total_value, 6), r.n_events))
+            for r in df.collect()
+        )
+
+    return SimpleNamespace(
+        path=os.path.join(state, "target"),
+        commit=lambda i: run_events_rollup_once(spark, seen(i), state),
+        state=lambda: (
+            rollup(spark.read.parquet(os.path.join(state, "target"))),
+            spark.read.parquet(os.path.join(state, "log")).count(),
+        ),
+        want=lambda ids: (rollup(rollup_date_type(seen(max(ids)))), len(ids)),
+    )
+
+
+_COMMIT_SITES = {
+    "compact": _compact_site,
+    "upsert": _upsert_site,
+    "span_dedup": _span_dedup_site,
+    "erp": _erp_site,
+}
+
+
+@pytest.mark.parametrize("site", sorted(_COMMIT_SITES))
+def test_compact_parquet_crash_recovery_states(spark, sf_dir, tmp_path, crash_once, site):
+    """Every layout a crashed directory commit can leave, at each of the
+    four sites that rewrite a parquet directory through it. Batch 0
+    commits, batch 1 dies (or a broken layout is laid down by hand), batch
+    2 commits: the directory must then hold exactly the rows of the
+    batches that committed, with no stage or aside copy left beside it.
+
+    The hand-made layouts are the ones earlier per-site swaps lost rows
+    in: a first write that died with only Spark's ``_temporary`` in the
+    stage, a complete stage beside a partly deleted target, and a target
+    that vanished after being renamed aside."""
+    make = _COMMIT_SITES[site]
+    for case in [*COMMIT_CRASHES, "first_write_died", "stage_beside_remnant", "aside_only"]:
+        s = make(spark, str(tmp_path / case), sf_dir)
+        committed = {0, 1, 2}
+        if case == "first_write_died":
+            os.makedirs(os.path.join(s.path + "__staging", "_temporary", "0"))
+            committed = {0, 2}
+        s.commit(0)
+        if case in COMMIT_CRASHES:
+            crash_once(*COMMIT_CRASHES[case])
+            with pytest.raises(InjectedCrash):
+                s.commit(1)
+            if case == "staged":
+                committed = {0, 2}
+        elif case == "stage_beside_remnant":
+            twin = make(spark, str(tmp_path / case / "twin"), sf_dir)
+            twin.commit(0)
+            twin.commit(1)
+            shutil.copytree(twin.path, s.path + "__staging")
+            os.remove(os.path.join(
+                s.path, next(f for f in sorted(os.listdir(s.path)) if f.endswith(".parquet"))
+            ))
+        elif case == "aside_only":
+            os.rename(s.path, s.path + "__old")
+            committed = {0, 2}
+        s.commit(2)
+        assert s.state() == s.want(committed), case
+        assert not os.path.exists(s.path + "__staging"), case
+        assert not os.path.exists(s.path + "__old"), case
+
+
+def test_directory_commits_share_one_helper():
+    """No code in the engine renames, replaces or recursively deletes
+    outside three places: the snapshot log (``sources/versioning.py``),
+    the directory commit (``sources/sinks.py``'s ``replace_file``,
+    ``_swap`` and ``recover_directory``) and the ERP pipeline's stale-lock
+    takeover (``pipelines.run_events_rollup_once``) — no call site keeps
+    its own swap. ``atexit.register(shutil.rmtree, d)`` passes a
+    reference, not a call."""
+    import ast
+    import pathlib
+
+    allowed = {
+        "sources/versioning.py": None,  # any function
+        "sources/sinks.py": {"replace_file", "_swap", "recover_directory"},
+        "pipelines.py": {"run_events_rollup_once"},
+    }
+    banned = {("os", "rename"), ("os", "replace"), ("shutil", "rmtree")}
+    root = pathlib.Path(__file__).resolve().parents[1] / "ssg_etl_spark"
+    found = []
+
+    def visit(node, rel, fn):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, ast.ImportFrom) and any(
+                (child.module, a.name) in banned for a in child.names
+            ):
+                found.append(f"{rel}:{child.lineno} imports {child.module} names")
+            if (
+                isinstance(child, ast.Call)
+                and isinstance(child.func, ast.Attribute)
+                and isinstance(child.func.value, ast.Name)
+                and (child.func.value.id, child.func.attr) in banned
+                and not (rel in allowed and (allowed[rel] is None or fn in allowed[rel]))
+            ):
+                found.append(f"{rel}:{child.lineno} in {fn}")
+            is_fn = isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef))
+            visit(child, rel, child.name if is_fn else fn)
+
+    for f in sorted(root.rglob("*.py")):
+        rel = f.relative_to(root).as_posix()
+        visit(ast.parse(f.read_text()), rel, None)
+    assert not found, found
 
 
 def test_write_range_sorted_is_globally_ordered_without_single_task(

@@ -626,11 +626,13 @@ def test_streaming_span_dedup_matches_batch(spark, sf_dir, tmp_path):
 
 
 def test_span_dedup_swap_crash_recovery(spark, tmp_path):
-    """The stage-then-swap index rewrite must recover from a crash between
-    the target delete and the staging rename (staging present, target
-    missing → finish the swap), and discard stale staging beside an intact
-    target."""
+    """The index commit recovers from each layout its rename-only swap can
+    leave: target renamed aside with the committed stage not yet in
+    (finish the swap), an aside copy beside the target (drop it), and a
+    stage without its commit record beside an intact target (discard
+    it)."""
     import os
+    import shutil
 
     from ssg_etl_spark.streaming.pipeline import foreach_batch_span_dedup
 
@@ -643,8 +645,10 @@ def test_span_dedup_swap_crash_recovery(spark, tmp_path):
     apply(b0, 0)
     idx_rows = {r.chunk_hash for r in spark.read.parquet(index_path).collect()}
 
-    # Crash simulation: swap died after removing the target.
-    os.rename(index_path, index_path + "__staging")
+    # Crash between the two renames: the target is aside, the committed
+    # stage (here batch 0's index, record included) not yet renamed in.
+    os.rename(index_path, index_path + "__old")
+    shutil.copytree(index_path + "__old", index_path + "__staging")
     b1 = spark.createDataFrame([(2, boiler)], "doc_id long, text string")
     apply(b1, 1)  # must first finish the swap, then probe against it
     keeps = {(r.doc_id, r.batch_id): r.keep
@@ -654,14 +658,17 @@ def test_span_dedup_swap_crash_recovery(spark, tmp_path):
     assert {r.chunk_hash for r in spark.read.parquet(index_path).collect()} \
         == idx_rows
 
-    # Stale staging beside an intact target: discarded, batch applies.
-    os.makedirs(index_path + "__staging", exist_ok=True)
+    # Cleanup lost (aside copy beside the target) plus a stage that died
+    # mid-write (no record): both discarded, the batch applies.
+    shutil.copytree(index_path, index_path + "__old")
+    os.makedirs(os.path.join(index_path + "__staging", "_temporary", "0"))
     b2 = spark.createDataFrame(
         [(3, " ".join(f"z{i}" for i in range(16)))],
         "doc_id long, text string",
     )
     apply(b2, 2)
     assert not os.path.exists(index_path + "__staging")
+    assert not os.path.exists(index_path + "__old")
     keeps = {(r.doc_id, r.batch_id): r.keep
              for r in spark.read.parquet(out).collect()}
     assert keeps[(3, 2)] is True
@@ -669,9 +676,10 @@ def test_span_dedup_swap_crash_recovery(spark, tmp_path):
 
 def test_span_dedup_replay_idempotent(spark, tmp_path):
     """Micro-batch replay must not append contradictory keep rows: after a
-    completed swap the batch marker makes the replay a no-op; after a
-    crash BEFORE the swap the recomputed decisions overwrite the batch's
-    own output partition (dynamic partition overwrite) bit-identically."""
+    completed commit the index's record (its batch id) makes the replay a
+    no-op; after a crash BEFORE the commit the recomputed decisions
+    overwrite the batch's own output partition (dynamic partition
+    overwrite) bit-identically."""
     import shutil
 
     from ssg_etl_spark.streaming.pipeline import foreach_batch_span_dedup
@@ -701,7 +709,7 @@ def test_span_dedup_replay_idempotent(spark, tmp_path):
     assert (2, 0, False, 1) in want  # boiler chunk deduped against batch 0
     assert (2, 1, True, 1) in want  # fresh chunk kept
 
-    # Replay AFTER the swap: marker short-circuits — decisions unchanged
+    # Replay AFTER the commit: the record short-circuits — decisions unchanged
     # (recomputing here would flip every keep to False).
     apply(b1, 1)
     assert snapshot() == want
