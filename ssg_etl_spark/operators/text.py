@@ -96,10 +96,40 @@ def words(col: Column) -> Column:
     return F.split(col, " ")
 
 
+def word_pairs(df: DataFrame) -> DataFrame:
+    """(doc_id, prev, cur): every word of every document with the word
+    that follows it; ``cur`` is NULL at a document's last word, and a NULL
+    text has no rows. The token stream and the bigram stream of
+    :func:`bigram_logprob` in one explode.
+
+    The text is split once, in a projection below the explode, and the
+    pairs are ``arrays_zip(ws, ws[2:])`` — array expressions only, so the
+    explode runs in whole-stage codegen and no lambda re-splits the text
+    per pair.
+    """
+    ws = F.col("_ws")
+    pairs = F.arrays_zip(ws.alias("prev"), F.slice(ws, 2, F.size(ws)).alias("cur"))
+    return (
+        fan_out(df)
+        .select("doc_id", words(F.col("text")).alias("_ws"))
+        .select("doc_id", F.explode(pairs).alias("_p"))
+        .select("doc_id", "_p.prev", "_p.cur")
+    )
+
+
 def word_shingles(df: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 3) -> DataFrame:
     """DISTINCT n-word shingles per document (the unit set for Jaccard /
-    MinHash). Expressed with transform+sequence so the explode happens
-    JVM-side; documents shorter than n words contribute no shingles.
+    MinHash); documents shorter than n words, and NULL texts, contribute
+    no shingles. Words are the single-space split of the text, empty
+    tokens kept.
+
+    Each document is split ONCE, in a projection below the explode, and
+    the windows are built with array expressions only:
+    ``arrays_zip(ws, ws[2:], ws[3:])`` cut to its first ``size(ws) - 2``
+    triples. A ``transform(sequence(...), i -> element_at(ws, i + 1) ...)``
+    lambda over ``ws = split(text)`` would make Catalyst inline the split
+    into the lambda — three full splits per shingle — and a higher-order
+    function keeps the explode out of whole-stage codegen.
 
     Dedup is ``array_distinct`` BEFORE the explode, not ``.distinct()``
     after it (r13 optimization): the distinct key was (id, shingle), so
@@ -108,28 +138,37 @@ def word_shingles(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     the post-explode ``distinct()`` paid a full shuffle of the exploded
     corpus shingle stream (measured at sf0.1: 61.8 MB exchanged for
     8 MB of distinct output; at 100 TB that exchange is corpus-sized).
-    Output rows are identical (pinned by the oracle-checked dedup
-    queries and tests/test_dedup.py).
+    Words never contain a space, so distinct triples and distinct joined
+    shingles are the same set. Output rows are identical (pinned by the
+    oracle-checked dedup queries and tests/test_dedup.py).
     """
     assert n == 3, "SQL-oracle parity is written for n=3"
+    ws = F.col("_ws")
+    k = F.size(ws)
+    windows = F.when(
+        k >= n,
+        F.array_distinct(
+            F.slice(
+                F.arrays_zip(
+                    ws.alias("w1"),
+                    F.slice(ws, 2, k).alias("w2"),
+                    F.slice(ws, 3, k).alias("w3"),
+                ),
+                1,
+                k - 2,
+            )
+        ),
+    )
     # Few-splits sources (single-file fixture parquet) would run the whole
     # explode on one core; no-op at real scale (see partitioning.fan_out).
-    df = fan_out(df)
-    ws = F.split(F.col(text_col), " ")
-    shingles = F.when(
-        F.size(ws) >= n,
-        F.transform(
-            F.sequence(F.lit(0), F.size(ws) - n),
-            lambda i: F.concat_ws(
-                " ",
-                F.element_at(ws, i + 1),
-                F.element_at(ws, i + 2),
-                F.element_at(ws, i + 3),
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    return df.select(
-        F.col(id_col), F.explode(F.array_distinct(shingles)).alias("shingle")
+    return (
+        fan_out(df)
+        .select(F.col(id_col), words(F.col(text_col)).alias("_ws"))
+        .select(F.col(id_col), F.explode(windows).alias("_w"))
+        .select(
+            F.col(id_col),
+            F.concat_ws(" ", "_w.w1", "_w.w2", "_w.w3").alias("shingle"),
+        )
     )
 
 
@@ -243,6 +282,12 @@ def chunk_documents(
     document shorter than one chunk yields exactly one chunk. Pure
     sequence+slice+explode — the chunk explosion is JVM-side and the output
     grows ~n_words/step per doc, independent of document count skew.
+
+    The text is split ONCE per document, in a projection below the
+    explode, and both the chunk starts and every chunk's slice read that
+    array. Splitting in the same ``select`` as the explode would put the
+    split above the generator — one full split per CHUNK, work quadratic
+    in document length.
     """
     if not (0 <= overlap_words < chunk_words):
         raise ValueError(
@@ -250,23 +295,20 @@ def chunk_documents(
             "silently skip words between chunks)"
         )
     step = chunk_words - overlap_words
-    df = fan_out(df)  # chunk slicing is CPU-heavy; rescue few-split scans
-    ws = words(F.col("text"))
-    n = F.size(ws)
+    ws = F.col("_ws")
     starts = F.sequence(
-        F.lit(0), F.greatest(n - overlap_words - 1, F.lit(0)), F.lit(step)
+        F.lit(0), F.greatest(F.size(ws) - overlap_words - 1, F.lit(0)), F.lit(step)
     )
+    chunk = F.slice(ws, F.col("start") + 1, chunk_words)
     return (
-        df.select("doc_id", F.explode(starts).alias("start"), ws.alias("_ws"))
+        fan_out(df)  # chunk slicing is CPU-heavy; rescue few-split scans
+        .select("doc_id", words(F.col("text")).alias("_ws"))
+        .select("doc_id", "_ws", F.explode(starts).alias("start"))
         .select(
             "doc_id",
             (F.col("start") / step).cast("int").alias("chunk_id"),
-            F.array_join(
-                F.slice(F.col("_ws"), F.col("start") + 1, chunk_words), " "
-            ).alias("chunk_text"),
-            F.size(F.slice(F.col("_ws"), F.col("start") + 1, chunk_words)).alias(
-                "chunk_words"
-            ),
+            F.array_join(chunk, " ").alias("chunk_text"),
+            F.size(chunk).alias("chunk_words"),
         )
     )
 
@@ -945,37 +987,29 @@ def bigram_logprob(df: DataFrame, lam: float = 0.75) -> DataFrame:
     All probability inputs are ratios of exact integers, so the mixed
     term is bit-identical cross-engine before the final rounding.
 
+    Bigrams and unigram tokens both come from :func:`word_pairs`: each
+    text is split once below a lambda-free, codegen'd explode. A
+    ``transform(sequence(1, n - 1), i -> (element_at(ws, i), ...))`` over
+    ``ws = split(text)`` would inline the split into the lambda, re-splitting
+    the whole text twice per bigram, and keep the explode out of
+    whole-stage codegen.
+
     Documents with fewer than 2 tokens have no bigrams and drop out.
     """
     from ssg_etl_spark.cache import persist_tracked
 
-    ws = words(F.col("text"))
-    big = F.transform(
-        F.sequence(F.lit(1), F.size(ws) - 1),
-        lambda i: F.struct(
-            F.element_at(ws, i).alias("prev"),
-            F.element_at(ws, i + 1).alias("cur"),
-        ),
-    )
-    pairs = (
-        fan_out(df)
-        .filter(F.size(ws) >= 2)
-        .select("doc_id", F.explode(big).alias("_b"))
-        .select("doc_id", "_b.prev", "_b.cur")
-    )
+    stream = word_pairs(df)
     tfb = persist_tracked(
-        pairs.groupBy("doc_id", "prev", "cur").agg(
-            F.count(F.lit(1)).alias("c")
-        )
+        stream.filter(F.col("cur").isNotNull())
+        .groupBy("doc_id", "prev", "cur")
+        .agg(F.count(F.lit(1)).alias("c"))
     )
     corpus_bi = persist_tracked(
         tfb.groupBy("prev", "cur").agg(F.sum("c").alias("cfb"))
     )
     ctx = corpus_bi.groupBy("prev").agg(F.sum("cfb").alias("cfp"))
 
-    terms = fan_out(df).select(
-        "doc_id", F.explode(words(F.col("text"))).alias("term")
-    )
+    terms = stream.select("doc_id", F.col("prev").alias("term"))
     uni = persist_tracked(
         terms.groupBy("term").agg(F.count(F.lit(1)).alias("cf"))
     )

@@ -3,6 +3,10 @@ bounded by the exact baseline."""
 
 from __future__ import annotations
 
+import pytest
+from hypothesis import HealthCheck, example, given, settings
+from hypothesis import strategies as st
+
 from ssg_etl_spark.operators import dedup
 from ssg_etl_spark.sources.tables import load_table
 
@@ -1637,3 +1641,90 @@ def test_semdedup_collapsed_cluster_guard_fires(spark):
     ).collect()
     assert len(out) == n
     assert sum(1 for r in out if r["is_kept"]) == 1
+
+
+# --- tokenizers ≡ plain Python ------------------------------------------
+#
+# word_shingles, word_pairs (the bigram_logprob token stream) and
+# chunk_documents against the str.split(' ') definitions they implement:
+# one single-space split, empty tokens kept (double, leading, trailing
+# spaces), tabs and newlines inside words, NULL texts.
+
+_TOKENIZER_TEXT = st.text(
+    alphabet=st.sampled_from(list("    \t\nabABé")), max_size=30
+)
+_TOKENIZER_CORPUS = st.lists(st.one_of(st.none(), _TOKENIZER_TEXT), max_size=12)
+_CHUNK, _OVERLAP = 3, 1
+
+
+def _ref_shingles(texts):
+    return sorted(
+        {
+            (i, " ".join(t[j : j + 3]))
+            for i, text in enumerate(texts)
+            if text is not None
+            for t in [text.split(" ")]
+            for j in range(len(t) - 2)
+        }
+    )
+
+
+def _ref_pairs(texts):
+    from collections import Counter
+
+    return Counter(
+        (i, t[j], t[j + 1] if j + 1 < len(t) else None)
+        for i, text in enumerate(texts)
+        if text is not None
+        for t in [text.split(" ")]
+        for j in range(len(t))
+    )
+
+
+def _ref_chunks(texts, ansi):
+    step = _CHUNK - _OVERLAP
+    rows = []
+    for i, text in enumerate(texts):
+        if text is None:
+            # size(NULL) is -1 with ANSI off, NULL with it on; the start
+            # bound clamps either to 0, so a NULL text keeps one chunk.
+            rows.append((i, 0, None, None if ansi else -1))
+            continue
+        w = text.split(" ")
+        for s in range(0, max(len(w) - _OVERLAP - 1, 0) + 1, step):
+            c = w[s : s + _CHUNK]
+            rows.append((i, s // step, " ".join(c), len(c)))
+    return sorted(rows, key=repr)
+
+
+@pytest.mark.parametrize("ansi", [False, True], ids=["ansi_off", "ansi_on"])
+@given(texts=_TOKENIZER_CORPUS)
+@example(
+    texts=["", " ", "a b", "a b c", "a b c a b c a b c", " a  b ", "a\tb c\nd é",
+           "  ", None, "x y z x y z w"]
+)
+@settings(
+    max_examples=12,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+def test_word_shingles_match_python_reference(spark, ansi, texts):
+    from collections import Counter
+
+    from ssg_etl_spark.operators.text import chunk_documents, word_pairs, word_shingles
+
+    df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", str(ansi).lower())
+    try:
+        shingles = sorted(tuple(r) for r in word_shingles(df).collect())
+        pairs = Counter(tuple(r) for r in word_pairs(df).collect())
+        chunks = sorted(
+            (tuple(r) for r in chunk_documents(df, _CHUNK, _OVERLAP).collect()),
+            key=repr,
+        )
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+    assert shingles == _ref_shingles(texts)
+    assert pairs == _ref_pairs(texts)
+    assert chunks == _ref_chunks(texts, ansi)

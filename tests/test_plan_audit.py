@@ -18,6 +18,7 @@ from plan_audit import (  # noqa: E402
     audit_one,
     compute_fingerprints,
     formatted_plan,
+    plan_nodes,
 )
 
 from ssg_etl_spark.plans.registry import load_all
@@ -112,3 +113,41 @@ def test_detector_catches_single_partition_window(spark, sf_dir):
         .alias("rn")
     )
     assert single_partition_windows(good) == 0
+
+
+@pytest.mark.parametrize("op", ["word_shingles", "chunk_documents", "bigram_logprob"])
+def test_tokenizers_split_once_codegen(spark, sf_dir, op):
+    """Each tokenizer splits a document once, in a Project below its
+    explode, and the explode runs in whole-stage codegen: no node holds a
+    lambda (a higher-order function over ``split(text)`` re-splits the text
+    per element and is interpreted), no generator argument and no node
+    above a Generate evaluates ``split(``. Checked on the executed plan,
+    where codegen stages are final."""
+    from ssg_etl_spark.operators import text
+    from ssg_etl_spark.sources.tables import load_table
+
+    df = getattr(text, op)(load_table(spark, sf_dir, "documents"))
+    df.collect()
+    generates, splits, lambdas = 0, [], []
+    for node, ancestors in plan_nodes(df):
+        name = node.getClass().getSimpleName()
+        exprs = node.expressions().toString()
+        if "lambdafunction" in exprs:
+            lambdas.append(name)
+        if "split(" in exprs and not (
+            name == "ProjectExec"
+            and any(a.getClass().getSimpleName() == "GenerateExec" for a in ancestors)
+        ):
+            splits.append(f"{name}: {exprs}")
+        if name == "GenerateExec":
+            generates += 1
+            stage = next(
+                a.getClass().getSimpleName()
+                for a in reversed(ancestors)
+                if a.getClass().getSimpleName()
+                in ("WholeStageCodegenExec", "InputAdapter", "AdaptiveSparkPlanExec")
+            )
+            assert stage == "WholeStageCodegenExec", f"interpreted Generate: {exprs}"
+    assert generates, "no Generate in the plan"
+    assert not lambdas, lambdas
+    assert not splits, splits

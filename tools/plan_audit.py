@@ -13,7 +13,10 @@ decide 100 TB behavior:
                    argument lists) and notes WindowGroupLimit pushdown;
 * python stages  — FlatMapGroupsInPandas / MapInPandas / ArrowEvalPython
                    (the deliberate pandas operators) vs BatchEvalPython
-                   (row-at-a-time UDFs — always a bug here).
+                   (row-at-a-time UDFs — always a bug here);
+* interpreted    — Generate nodes outside whole-stage codegen and nodes
+                   holding a lambdafunction (higher-order functions run
+                   interpreted per row). A note, never a flag.
 
 Node counts come from the numbered details section ("(N) NodeName") only —
 the tree overview repeats every node, which would double-count.
@@ -222,6 +225,68 @@ def single_partition_windows(df) -> int:
     return hits
 
 
+def plan_nodes(df):
+    """Yield ``(node, ancestors)`` for every JVM physical node of ``df``'s
+    plan, root first, each node once. The walk enters the adaptive
+    wrapper's current plan (the initial plan before execution, the final
+    one after), query stages and the plans of cached relations."""
+    jvm = df.sparkSession._jvm
+    seen = set()
+    stack = [(df._jdf.queryExecution().executedPlan(), ())]
+    while stack:
+        node, ancestors = stack.pop()
+        key = jvm.System.identityHashCode(node)
+        if key in seen:
+            continue
+        seen.add(key)
+        yield node, ancestors
+        cls = node.getClass().getSimpleName()
+        if cls == "AdaptiveSparkPlanExec":
+            kids = [node.executedPlan()]
+        elif cls.endswith("QueryStageExec"):
+            kids = [node.plan()]
+        elif cls == "InMemoryTableScanExec":
+            kids = [node.relation().cachedPlan()]
+        else:
+            children = node.children()
+            kids = [children.apply(i) for i in range(children.size())]
+        stack.extend((kid, ancestors + (node,)) for kid in reversed(kids))
+
+
+def _has_codegen_fallback(jvm, node) -> bool:
+    fallback = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+    cls = fallback._java_lang_class
+    exprs = node.expressions()
+    stack = [exprs.apply(i) for i in range(exprs.size())]
+    while stack:
+        e = stack.pop()
+        if cls.isInstance(e):
+            return True
+        children = e.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return False
+
+
+def interpreted_nodes(df, plan: str) -> tuple[int, int]:
+    """(Generate nodes that whole-stage codegen cannot take, plan nodes
+    holding a ``lambdafunction``). A Generate joins a codegen stage only if
+    its generator supports codegen and none of its expressions is a
+    ``CodegenFallback`` — the test ``CollapseCodegenStages`` applies, made
+    here on the unexecuted plan. Higher-order functions (``transform``,
+    ``filter``, ``aggregate`` ...) are interpreted per row; the lambda
+    count comes from the numbered details section, like node_counts."""
+    jvm = df.sparkSession._jvm
+    generates = sum(
+        1
+        for node, _ in plan_nodes(df)
+        if node.getClass().getSimpleName() == "GenerateExec"
+        and (not node.supportCodegen() or _has_codegen_fallback(jvm, node))
+    )
+    blocks = re.split(r"^\(\d+\) ", plan, flags=re.MULTILINE)[1:]
+    lambdas = sum(1 for b in blocks if "lambdafunction" in b)
+    return generates, lambdas
+
+
 def audit_one(name: str, df, plan: str) -> list[str]:
     notes: list[str] = []
     counts = node_counts(plan)
@@ -281,6 +346,10 @@ def audit_one(name: str, df, plan: str) -> list[str]:
             counts.get("Generate", 0),
         )
     )
+    # A note, not a fingerprint field: the interpreted-expression work left
+    # in the plan (ROADMAP aim 4 — the engine's silent decisions).
+    generates, lambdas = interpreted_nodes(df, plan)
+    notes.append(f"interpreted: generates={generates} lambda_nodes={lambdas}")
     return notes
 
 
