@@ -261,7 +261,7 @@ def main() -> None:
     spark = get_spark(
         "ssg-etl-bench",
         master=f"local[{cpus}]",
-        shuffle_partitions=int(os.environ.get("SPARK_GRAFT_SHUFFLE", cpus)),
+        shuffle_partitions=int(cpus),
     )
     # include_extra: the headline set predates the 50-entry public cap and
     # must stay comparable round-over-round (rollup_date_user is extra now).

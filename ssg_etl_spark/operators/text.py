@@ -279,9 +279,10 @@ def chunk_documents(
 
     Chunk i covers words [i*step, i*step + chunk_words) with
     step = chunk_words - overlap_words; the final chunk may be short; a
-    document shorter than one chunk yields exactly one chunk. Pure
-    sequence+slice+explode — the chunk explosion is JVM-side and the output
-    grows ~n_words/step per doc, independent of document count skew.
+    document shorter than one chunk yields exactly one chunk, and a NULL
+    text yields none. Pure sequence+slice+explode — the chunk explosion is
+    JVM-side and the output grows ~n_words/step per doc, independent of
+    document count skew.
 
     The text is split ONCE per document, in a projection below the
     explode, and both the chunk starts and every chunk's slice read that
@@ -296,8 +297,13 @@ def chunk_documents(
         )
     step = chunk_words - overlap_words
     ws = F.col("_ws")
-    starts = F.sequence(
-        F.lit(0), F.greatest(F.size(ws) - overlap_words - 1, F.lit(0)), F.lit(step)
+    # Only a non-NULL split explodes: ``greatest`` would clamp a NULL
+    # text's size (-1, or NULL under ANSI) to one chunk.
+    starts = F.when(
+        ws.isNotNull(),
+        F.sequence(
+            F.lit(0), F.greatest(F.size(ws) - overlap_words - 1, F.lit(0)), F.lit(step)
+        ),
     )
     chunk = F.slice(ws, F.col("start") + 1, chunk_words)
     return (

@@ -6,115 +6,97 @@ partition, so any expensive narrow stage downstream (shingle explode,
 chunk hashing, per-row × per-anchor dot products) runs on one core no
 matter how many the session has. Measured at sf0.1: the 3-word shingle
 explode over `documents` took 6.8 s single-partition vs 1.5 s after a
-32-way repartition — that serialization, not hash math, dominated the
-committed dedup_minhash_lsh bench line.
+32-way repartition.
 
-``fan_out`` repartitions ONLY when the source parallelism is below the
-session default. At production scale inputs arrive in many splits, the
-condition is false, and the operator plan is unchanged — crucially this
-never adds a full-corpus shuffle of raw text/vector bytes to a 100 TB
-plan. The bytes bound holds structurally: the file scan packs splits to
-``spark.sql.files.maxPartitionBytes`` (default 128 MB), so "fewer
-partitions than cores" implies the scan reads at most
-cores × 128 MB — the triggered shuffle is executor-memory-sized by
-construction (the one exception, a single unsplittable multi-GB row
-group, is a broken writer's layout that needs rescuing anyway).
+The rule, the one parallelism decision the operators make: ``fan_out``
+repartitions a frame round-robin when its optimized logical plan has no
+shuffling node AND it scans fewer partitions than the session's default
+parallelism; every other frame is returned as it is. Below a shuffle the
+width is ``spark.sql.shuffle.partitions`` / AQE coalescing (set by
+``session.get_spark``), not the input splits. The plan is read
+structurally, node by node, so neither a column nor a path named
+``Exchange…`` nor physical planning enters the decision, and the partition
+count is asked only of shuffle-free plans, where it starts no job (under
+AQE, asking it of a shuffled plan runs every stage below the last one).
+
+At production scale inputs arrive in many splits, the condition is false,
+and the plan is unchanged — this never adds a full-corpus shuffle of raw
+text/vector bytes to a 100 TB plan. The bytes bound holds structurally:
+the file scan packs splits to ``spark.sql.files.maxPartitionBytes``
+(default 128 MB), so "fewer partitions than cores" implies the scan reads
+at most cores × 128 MB.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 
-# Default task granularity for size-aware fans over dense vector tables
-# (fan_out's ``bytes_per_task``). ~256 KiB of packed float32 vectors is
-# ~1k rows at dim 64 — per-task arithmetic then sits at the same order
-# as the per-task fixed cost, so halving it stops paying off. Env knob
-# for deployments whose vector work per byte differs (wider dims, more
-# distance evaluations per row).
-VECTOR_BYTES_PER_TASK = int(
-    os.environ.get("SPARK_GRAFT_VEC_FANOUT_BYTES", str(256 << 10))
+# Task granularity of the size-aware fan over dense vector tables
+# (``fan_out``'s ``bytes_per_task``): ~256 KiB of packed float32 vectors is
+# ~1k rows at dim 64, where per-task arithmetic sits at the order of the
+# per-task fixed cost, so halving it stops paying off.
+VECTOR_BYTES_PER_TASK = 256 << 10
+
+# Logical nodes whose physical form shuffles (or broadcasts) their input.
+_SHUFFLING = frozenset(
+    "Aggregate Join Window RepartitionByExpression RebalancePartitions"
+    " GlobalLimit Tail Offset FlatMapGroupsInPandas FlatMapCoGroupsInPandas"
+    " FlatMapGroupsInArrow FlatMapCoGroupsInArrow".split()
 )
+
+
+def _nodes(seq):
+    it = seq.iterator()
+    while it.hasNext():
+        yield it.next()
+
+
+def _shuffles(plan) -> bool:
+    """Whether ``plan`` (a JVM plan node) shuffles anywhere below it.
+
+    The walk takes ``innerChildren`` too: a subquery's plan, and a cached
+    relation's physical plan, whose shuffles show as ``…Exchange`` nodes
+    or, under AQE, as the ``AdaptiveSparkPlan`` that only wraps plans with
+    a shuffle or a subquery."""
+    name = plan.nodeName()
+    if (
+        name in _SHUFFLING
+        or name.endswith("Exchange")
+        or name == "AdaptiveSparkPlan"
+        or (name == "Repartition" and plan.shuffle())
+        or (name == "Sort" and getattr(plan, "global")())
+    ):
+        return True
+    return any(
+        _shuffles(c)
+        for c in (*_nodes(plan.children()), *_nodes(plan.innerChildren()))
+    )
 
 
 def fan_out(df: DataFrame, bytes_per_task: int | None = None) -> DataFrame:
     """Round-robin repartition to the session's default parallelism when
-    the plan's current partitioning is narrower — a no-op otherwise.
+    ``df`` is a shuffle-free plan over fewer partitions — ``df`` itself
+    otherwise (see the module docstring).
 
-    Plans that already contain an Exchange are returned unchanged (r13):
-    their output parallelism is governed by ``spark.sql.shuffle
-    .partitions`` / AQE coalescing, not by input splits — and, more
-    importantly, probing their partition count via ``df.rdd`` under AQE
-    MATERIALIZES every query stage below the final segment (AQE must run
-    the shuffles to fix the plan). That silently executed whole upstream
-    pipelines once, uncached, before the real query ran them again —
-    stage metrics showed hashed-TF feature builds and similar shuffled
-    inputs duplicated wherever an operator wrapped them in fan_out. A
-    bare scan/projection has no query stages, so the probe is free
-    exactly where the rescue is needed.
-
-    ``bytes_per_task`` (r13, optional) makes the fan width SIZE-AWARE for
-    callers whose per-row work is roughly proportional to input bytes
-    (dense vector arithmetic — k-means assignment, brute-force cosine):
-    the target becomes ``clamp(ceil(estimated_bytes / bytes_per_task),
-    1, default_parallelism)`` using the optimizer's size estimate (no
-    job, no scan). The blanket default-parallelism fan is right for
-    text/codec expansion (per-row work is orders of magnitude above the
-    bytes read) but WRONG for tiny numeric tables: measured at sf0.1,
-    one Lloyd-iteration job over the 2000-row embedding table ran 3×
-    slower fanned to 32 tasks (63 rows each) than at its size-derived
-    width — per-task fixed cost (scheduling + instantiating the fat
-    interpreted distance expression per task) dominated 18 KB tasks. At
-    production scale a multi-split input exceeds the session parallelism
-    and BOTH forms no-op, so the parameter only governs the small-corpus
-    regime the blanket fan was over-shooting.
+    ``bytes_per_task`` makes the width SIZE-AWARE for callers whose per-row
+    work is roughly proportional to input bytes (dense vector arithmetic —
+    k-means assignment, IVF probing): the target becomes
+    ``clamp(ceil(estimated_bytes / bytes_per_task), 1, parallelism)`` from
+    the optimizer's size estimate (no job, no scan). The blanket fan is
+    right for text/codec expansion, whose per-row work is orders of
+    magnitude above the bytes read, but it shreds a tiny vector table into
+    sub-KB tasks whose fixed cost dominates every iteration job.
     """
-    spark = df.sparkSession
-    parallelism = spark.sparkContext.defaultParallelism
-    target = parallelism
-    size_target = None
-    if bytes_per_task:
-        est = int(
-            str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        )
-        # Missing/degenerate estimates (<=0, or the 8 EB "unknown"
-        # sentinel) fall back to the blanket fan rather than a bogus width.
-        if 0 < est < (1 << 60):
-            size_target = max(1, min(parallelism, -(-est // int(bytes_per_task))))
-            target = size_target
-    # The guard matches BroadcastExchange too, deliberately (re-confirmed
-    # r13): a broadcast build sounds cheap to materialize during the
-    # .rdd probe, but its LINEAGE need not be (the keep-list compositions
-    # broadcast an aggregate over a corpus-wide normalize/md5 pass —
-    # letting broadcast plans through the probe re-ran that pass once per
-    # fan_out call and measured SLOWER end-to-end than the serial stage
-    # it rescued). Callers whose dense work sits behind a broadcast join
-    # must fan the probe-side INPUT instead (see dedup_keep_list).
-    if "Exchange" in df._jdf.queryExecution().executedPlan().toString():
-        # Size-aware callers still get the NARROWING half on shuffled
-        # inputs (r13): a CACHED plan does not apply AQE partition
-        # coalescing (`spark.sql.optimizer.canChangeCachedPlanOutput
-        # Partitioning` defaults to false), so a small aggregated vector
-        # table persists at the static shuffle width — 32 sub-KB tasks
-        # whose per-task fixed cost dominates every downstream iteration
-        # job (the same pathology the size-aware fan fixed on bare
-        # scans). `coalesce` narrows without a shuffle and without the
-        # .rdd probe (the width decision needs only the optimizer's size
-        # estimate); it only ever REDUCES the partition count, and the
-        # size_target < parallelism condition means it cannot fire on a
-        # production-sized input (estimate >= bytes_per_task × session
-        # parallelism ⇒ no-op). The narrow side is FLOORED at
-        # parallelism/8: aggregate-plan size estimates run coarse (the
-        # hashed-TF table estimates 0.17 MB against ~1 MB actual, width
-        # 1), and a 1-task coalesce SERIALIZES every downstream job —
-        # measured interleaved at sf0.1, width-1 walls were +15% over
-        # the uncoalesced form while the floored widths beat it by ~7%
-        # (hashed_tf_kmeans medians: old 3.07 s, width-1 3.63,
-        # floor-4 2.87, floor-8 2.89).
-        if size_target is not None and size_target < parallelism:
-            return df.coalesce(max(parallelism // 8, size_target))
+    target = df.sparkSession.sparkContext.defaultParallelism
+    plan = df._jdf.queryExecution().optimizedPlan()
+    if _shuffles(plan):
         return df
+    if bytes_per_task:
+        est = int(str(plan.stats().sizeInBytes()))
+        # Missing/degenerate estimates (<=0, or the 8 EB "unknown"
+        # sentinel) keep the blanket width rather than a bogus one.
+        if 0 < est < (1 << 60):
+            target = max(1, min(target, -(-est // int(bytes_per_task))))
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df

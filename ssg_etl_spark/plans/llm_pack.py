@@ -2056,8 +2056,7 @@ def dedup_keep_list(spark: SparkSession, sf_dir: str) -> DataFrame:
     # on a single-split fixture scan (2.5 s serial in the stage metrics);
     # survivors inherits the fanned partitioning through the broadcast
     # semi-join, so the downstream shingle pipeline (whose own fan_out
-    # correctly refuses plans that already contain an Exchange) is
-    # parallel too. Same rows everywhere — every consumer is
+    # leaves shuffled plans as they are) is parallel too. Same rows everywhere — every consumer is
     # partitioning-independent.
     docs = fan_out(docs)
     norm = docs.select(

@@ -6,10 +6,11 @@ of the configuration a 100 TB deployment wants: skew-join handling, Arrow
 for the Pandas-UDF paths, UTC session time, and pushdown left enabled so
 Catalyst prunes parquet scans.
 
-``spark.sql.shuffle.partitions`` is the ``shuffle_partitions`` argument, else
-``$SPARK_GRAFT_SHUFFLE``, else 32, whatever the core count (the test suite
-passes 8). On a real cluster it should be ~2-3x total executor cores (or
-left to AQE's coalescing with a high initial value).
+``spark.sql.shuffle.partitions`` is the ``shuffle_partitions`` argument,
+else twice the started session's ``defaultParallelism`` (the task slots):
+the "2-3x cores" rule, with AQE coalescing the post-shuffle partitions
+that turn out small. It is the engine's one shuffle-width rule; the scan
+side is ``partitioning.fan_out``.
 
 ``local_frame`` is the engine's one way to turn Python rows into a
 DataFrame (a JVM local relation built from one Arrow table).
@@ -87,12 +88,9 @@ def get_spark(
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
         master = f"local[{cpus}]"
-    if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
 
     builder = SparkSession.builder.appName(app_name).master(master)
     conf = dict(DEFAULT_CONF)
-    conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     # Local mode runs everything in ONE JVM whose default 1g heap is shared
     # by every concurrent task — local[32] leaves ~30 MB/task and OOMs on
     # shuffle-heavy plans. Size the heap for the thread count (only
@@ -104,7 +102,11 @@ def get_spark(
         conf.update(extra_conf)
     for k, v in conf.items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    if shuffle_partitions is None:
+        shuffle_partitions = 2 * spark.sparkContext.defaultParallelism
+    spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    return spark
 
 
 def _arrow_value(dtype):

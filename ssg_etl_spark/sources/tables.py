@@ -26,7 +26,7 @@ from ssg_etl_spark.session import local_frame
 # and are never mutated (r9: the pin-off sweeps prove values are
 # zone-invariant; mutating an embedding app's session changed how ITS
 # OWN queries render timestamps — r8 judge finding #2). The
-# tz-robustness gates (tests/test_tz_robustness.py, tools/tz_sweep.py)
+# tz-robustness gates (tests/test_tz_robustness.py, tools/conf_sweep.py)
 # suppress even the engine-session pin so a dropped NTZ discipline
 # produces a detectable shift (round-7 advisor finding).
 _PIN_SESSION_UTC = True
@@ -99,7 +99,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     at build time; this guards against later app code changing it):
     embedder-built sessions are never mutated, because the NTZ contract
     makes every registered query's values zone-invariant without the pin
-    (tools/tz_sweep.py runs the whole registry with the pin suppressed).
+    (tools/conf_sweep.py runs the whole registry with the pin suppressed).
     """
     from ssg_etl_spark.functions.scalar import utc_wall
 

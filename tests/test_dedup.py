@@ -1681,15 +1681,12 @@ def _ref_pairs(texts):
     )
 
 
-def _ref_chunks(texts, ansi):
+def _ref_chunks(texts):
     step = _CHUNK - _OVERLAP
     rows = []
     for i, text in enumerate(texts):
         if text is None:
-            # size(NULL) is -1 with ANSI off, NULL with it on; the start
-            # bound clamps either to 0, so a NULL text keeps one chunk.
-            rows.append((i, 0, None, None if ansi else -1))
-            continue
+            continue  # a NULL text has no chunk, under either ANSI mode
         w = text.split(" ")
         for s in range(0, max(len(w) - _OVERLAP - 1, 0) + 1, step):
             c = w[s : s + _CHUNK]
@@ -1727,4 +1724,4 @@ def test_word_shingles_match_python_reference(spark, ansi, texts):
         spark.conf.set("spark.sql.ansi.enabled", prev)
     assert shingles == _ref_shingles(texts)
     assert pairs == _ref_pairs(texts)
-    assert chunks == _ref_chunks(texts, ansi)
+    assert chunks == _ref_chunks(texts)

@@ -76,7 +76,8 @@ def test_fan_out_size_aware_width(spark):
     """fan_out(bytes_per_task=...) derives the fan width from the plan's
     size estimate: a tiny input is NOT shredded to default parallelism
     (the r13 small-corpus fix), while a tiny bytes_per_task still caps
-    at the session parallelism; the blanket form fans regardless."""
+    at the session parallelism; the blanket form fans regardless, cached
+    or not."""
     from ssg_etl_spark.partitioning import fan_out
 
     one = spark.range(100).coalesce(1)
@@ -84,32 +85,53 @@ def test_fan_out_size_aware_width(spark):
     assert fan_out(one).rdd.getNumPartitions() == target
     assert fan_out(one, bytes_per_task=1 << 30).rdd.getNumPartitions() == 1
     assert fan_out(one, bytes_per_task=1).rdd.getNumPartitions() == target
+    # A cached single-partition frame is still a bare plan: it fans too.
+    cached = spark.range(100).coalesce(1).cache()
+    try:
+        assert fan_out(cached).rdd.getNumPartitions() == target
+    finally:
+        cached.unpersist()
 
 
-def test_fan_out_size_coalesces_small_shuffled_input(spark):
-    """The NARROWING half (r13): a size-aware caller whose input plan
-    contains an Exchange gets a shuffle-free coalesce down to the
-    size-derived width, floored at parallelism/8 — cached plans skip AQE
-    partition coalescing, so a tiny aggregated vector table otherwise
-    persists at the full static shuffle width. Without bytes_per_task
-    (or when the size-derived width is not below the session
-    parallelism) the shuffled plan is returned UNCHANGED — the
-    production regime must never be narrowed."""
+def test_fan_out_leaves_shuffled_input_unchanged(spark):
+    """Below a shuffle the width is the shuffle's: both forms return a
+    shuffled input as it is — cached or not, however small its size
+    estimate — and without starting a Spark job (under AQE, asking a
+    shuffled plan for its partition count runs its stages)."""
     from ssg_etl_spark.partitioning import fan_out
 
-    par = spark.sparkContext.defaultParallelism
-    wide = spark.range(100).repartition(max(par, 8))
-    n_wide = wide.rdd.getNumPartitions()
-    # Blanket form: shuffled plan untouched (the probe-materialization fix).
-    assert fan_out(wide).rdd.getNumPartitions() == n_wide
-    # Size-aware: tiny estimate -> coalesced to max(par // 8, width).
-    narrow = fan_out(wide, bytes_per_task=1 << 30)
-    assert narrow.rdd.getNumPartitions() == min(n_wide, max(par // 8, 1))
-    # Size-aware but big-enough estimate (size_target == parallelism):
-    # unchanged — a production-sized input is never coalesced.
-    assert (
-        fan_out(wide, bytes_per_task=1).rdd.getNumPartitions() == n_wide
-    )
+    wide = spark.range(100).repartition(8)
+    agg = spark.range(100).groupBy((F.col("id") % 3).alias("k")).count()
+    cached = agg.cache()
+    sc = spark.sparkContext
+    group = "fan-out-shuffled"
+    sc.setJobGroup(group, "fan_out")
+    try:
+        for df in (wide, agg, cached):
+            assert fan_out(df) is df
+            assert fan_out(df, bytes_per_task=1 << 30) is df
+            assert fan_out(df, bytes_per_task=1) is df
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        cached.unpersist()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+@pytest.mark.parametrize("where", ["column", "directory"])
+def test_fan_out_reads_the_plan_not_its_text(spark, tmp_path, where):
+    """A single-file scan fans to the default parallelism even when a
+    column or a directory of its path is named ``Exchange…``: the
+    decision reads plan nodes, not the plan's printed text."""
+    from ssg_etl_spark.partitioning import fan_out
+
+    col = "ExchangeRate" if where == "column" else "rate"
+    path = str(tmp_path / ("Exchange_dir" if where == "directory" else "t") / "p")
+    spark.range(100).selectExpr("id", f"id * 1.5 AS {col}").coalesce(1).write.parquet(path)
+    df = spark.read.parquet(path).select(col)
+    assert df.rdd.getNumPartitions() == 1
+    target = spark.sparkContext.defaultParallelism
+    assert fan_out(df).rdd.getNumPartitions() == target
 
 
 # ------------------------------------------------------------ HLL sketch

@@ -10,8 +10,8 @@ under-keyed ``row_number`` sorts, un-ordered ``limit`` — would return
 different VALUES at different parallelism. Contract: results are a pure
 function of the input data, not the physical partitioning (enforced by
 DECIMAL sum intermediates, ``array_sort``-wrapped collects, fully-keyed
-sort orders). The full registry × 4-config sweep lives in
-``tools/partition_sweep.py``; this in-suite gate pins the queries whose
+sort orders). The full registry sweep over widths, split sizes, AQE and
+broadcast is ``tools/conf_sweep.py``; this in-suite gate pins the queries whose
 plans contain the order-sensitive shapes, at the serial extreme (1
 shuffle partition) vs the suite default.
 """

@@ -1,4 +1,5 @@
-"""session.local_frame: the engine's one Python-rows → DataFrame boundary."""
+"""session.local_frame: the engine's one Python-rows → DataFrame boundary;
+the one shuffle-width rule."""
 
 from __future__ import annotations
 
@@ -13,7 +14,8 @@ import pytest
 
 from ssg_etl_spark.session import local_frame
 
-PACKAGE = pathlib.Path(__file__).resolve().parent.parent / "ssg_etl_spark"
+REPO = pathlib.Path(__file__).resolve().parent.parent
+PACKAGE = REPO / "ssg_etl_spark"
 
 SCHEMA = (
     "id long, name string, tags array<string>, amt decimal(12,2), "
@@ -147,3 +149,51 @@ def test_engine_has_one_local_frame_boundary():
         f"createDataFrame call sites outside the one boundary: {sites} — "
         "build the frame with session.local_frame instead"
     )
+
+
+def test_get_spark_derives_the_shuffle_width_from_the_cores(spark):
+    """Unless the caller passes ``shuffle_partitions``, ``get_spark`` sets
+    the shuffle width to twice the session's default parallelism."""
+    from ssg_etl_spark.session import get_spark
+
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "3")
+    try:
+        same = get_spark("ssg-etl-tests")
+        assert same is spark
+        want = 2 * spark.sparkContext.defaultParallelism
+        assert spark.conf.get("spark.sql.shuffle.partitions") == str(want)
+        get_spark("ssg-etl-tests", shuffle_partitions=5)
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "5"
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def test_one_parallelism_rule():
+    """AST lint: only ``session.py`` sets ``spark.sql.shuffle.partitions``
+    inside ``ssg_etl_spark/``; no engine, bench or tool file reads a
+    parallelism env knob; ``partitioning.py`` decides from plan nodes,
+    without printing a plan or reading the environment."""
+    knobs = {"SPARK_GRAFT_SHUFFLE", "SPARK_GRAFT_VEC_FANOUT_BYTES"}
+    setters, readers, partitioning = [], [], []
+    paths = [*PACKAGE.rglob("*.py"), REPO / "bench.py", *(REPO / "tools").rglob("*.py")]
+    for path in sorted(paths):
+        rel = str(path.relative_to(REPO))
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Constant) and node.value in knobs:
+                readers.append(rel)
+            if path.is_relative_to(PACKAGE) and path != PACKAGE / "session.py":
+                if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute):
+                    keys = [a for a in node.args[:1] if isinstance(a, ast.Constant)]
+                elif isinstance(node, ast.Dict):
+                    keys = [k for k in node.keys if isinstance(k, ast.Constant)]
+                else:
+                    keys = []
+                if any(k.value == "spark.sql.shuffle.partitions" for k in keys):
+                    setters.append(rel)
+            if path == PACKAGE / "partitioning.py":
+                if isinstance(node, ast.Attribute) and node.attr in {"toString", "environ", "getenv"}:
+                    partitioning.append(node.attr)
+    assert setters == [], f"shuffle width set outside session.py: {setters}"
+    assert readers == [], f"parallelism env knobs read in: {readers}"
+    assert partitioning == [], f"partitioning.py calls {partitioning}"

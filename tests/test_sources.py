@@ -729,7 +729,7 @@ def test_load_table_never_mutates_embedder_session_zone(spark, sf_dir):
     """r9 (r8 judge finding #2): load_table re-asserts the UTC pin only on
     ENGINE-BUILT sessions. An embedding app's session (no engineSession
     marker) keeps its own timeZone — the NTZ contract, not the pin,
-    guarantees value invariance (tools/tz_sweep.py). On engine sessions
+    guarantees value invariance (tools/conf_sweep.py). On engine sessions
     the pin restores UTC even if app code changed it afterwards."""
     from ssg_etl_spark.sources.tables import load_table
 

@@ -7,8 +7,8 @@ DATE)``, ``year``, ``date_format``) renders through that ambient zone, so
 without the ``utc_wall`` / ``utc_ts_lit`` idioms (functions/scalar.py) a
 query that passes the UTC oracle returns silently shifted values in a
 non-UTC session. Contract: query VALUES are instant-identical under any
-session zone. The full registry × 3-zone sweep lives in
-``tools/tz_sweep.py``; this in-suite gate pins the queries whose
+session zone. The full registry sweep over zones (and the other session
+settings) is ``tools/conf_sweep.py``; this in-suite gate pins the queries whose
 expressions extract calendar fields from TIMESTAMP columns — the ones that
 would regress if an edit dropped a ``utc_wall`` wrapper.
 """
