@@ -5,19 +5,28 @@ Scale design:
 * Exact dedup — hash-groupBy on a content digest; one shuffle on the digest.
 * N-gram Jaccard — exact pairwise similarity via a shingle self-join;
   quadratic in cluster size, linear in corpus (only docs sharing a shingle
-  ever meet). The candidate join is the shuffle; shingle sets are distinct'd
-  first to bound fanout.
+  ever meet). The shingle stream crosses the network ONCE, hash-partitioned
+  by shingle: the df cap is a window over that partitioning, and the
+  self-join (of the shingles held by two or more documents only), the
+  per-doc sizes and the cap all read that one exchange. Nothing is cached.
 * MinHash+LSH — the 100 TB path: k hash functions → per-doc signature →
   banded bucket join → candidates → exact-Jaccard verification. Only
   bucket-colliding pairs are verified, so cost ~ O(corpus + candidates).
 * SimHash — 64-bit signatures from word hashes; near-dup = small Hamming
   distance; banded by signature bytes for candidate generation.
+
+Skew: a shingle above the df cap still has all its rows meet in one window
+partition to be counted. That work is linear in its df (the window buffers
+the partition and spills past its threshold), never quadratic; the
+quadratic term, the self-join's pairs per shingle, only ever sees shingles
+at or under the cap.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from ssg_etl_spark.cache import persist_tracked
 from ssg_etl_spark.operators.lsh import (
@@ -42,21 +51,26 @@ DEFAULT_MAX_SHINGLE_DF = 1000
 
 
 def _cap_shingle_df(shingles: DataFrame, max_df: int | None) -> DataFrame:
-    """Drop shingles whose document frequency exceeds ``max_df``.
+    """Attach each shingle's document frequency as ``_df`` and keep the
+    rows with ``_df <= max_df`` (every row when ``max_df`` is None).
 
-    The hot-shingle list is corpus-size/max_df at worst, so AQE broadcasts
-    the anti-join side in practice; the df aggregation shuffles on the same
-    key the downstream self-join would, and removes its skew.
+    The df is ``count(1) over (partition by shingle)``: one exchange of the
+    shingle stream, hash-partitioned on the key every shingle-equality join
+    downstream uses, so those joins need no exchange of their own, and the
+    stream is read once (a hot list plus an anti-join read it twice, which
+    forced callers to cache it). Callers may use ``_df`` as the corpus df.
+
+    Skew: a capped-out shingle's rows all land in one window partition;
+    counting them is linear in its df and the window buffer spills, but
+    nothing there is quadratic. The cap still keeps every shingle that
+    reaches a self-join at or under ``max_df``.
     """
-    if max_df is None:
-        return shingles
-    hot = (
-        shingles.groupBy("shingle")
-        .agg(F.count(F.lit(1)).alias("_df"))
-        .filter(F.col("_df") > max_df)
-        .select("shingle")
+    counted = shingles.withColumn(
+        "_df", F.count(F.lit(1)).over(Window.partitionBy("shingle"))
     )
-    return shingles.join(hot, "shingle", "left_anti")
+    if max_df is None:
+        return counted
+    return counted.filter(F.col("_df") <= max_df)
 
 
 def exact_dedup_groups(documents: DataFrame) -> DataFrame:
@@ -130,17 +144,20 @@ def incremental_exact_dedup(
 
 def _shingle_jaccard(shingles: DataFrame, threshold: float) -> DataFrame:
     """Exact Jaccard over DISTINCT shingle sets: |∩| via self-join on
-    shingle, |∪| = |A|+|B|-|∩|. Callers pass a df-capped shingle set
-    (see :func:`_cap_shingle_df`) so the equality self-join has no hot
-    keys; sizes and intersections both use the same capped universe."""
-    # Persisted (r13): both join sides (sa, sb) consume the size table;
-    # unpersisted, the shingle-stream aggregation ran once per side.
-    # Doc-count-sized rows of (id, long) — bounded at any corpus scale.
-    sizes = persist_tracked(
-        shingles.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
-    )
-    a = shingles.alias("a")
-    b = shingles.alias("b")
+    shingle, |∪| = |A|+|B|-|∩|. Takes :func:`_cap_shingle_df` output, so
+    the self-join has no key above the cap and sizes and intersections
+    use the same capped universe.
+
+    Only shingles with ``_df >= 2`` enter the self-join: a shingle held
+    by one document cannot form a pair, so this is exact. The sizes count
+    every capped shingle. Both join sides and the sizes read the cap's
+    one shingle-partitioned exchange (reused, not repeated), and the
+    sort-merge self-join keeps its partitioning, so no branch is cached.
+    """
+    sizes = shingles.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
+    shared = shingles.filter(F.col("_df") >= 2)
+    a = shared.alias("a")
+    b = shared.alias("b")
     inter = (
         a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.doc_id") < F.col("b.doc_id")))
         .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
@@ -175,10 +192,9 @@ def _pair_jaccard(
     ARRAYS + ``array_intersect`` instead of a shingle-level self-join.
 
     :func:`_shingle_jaccard` pairs ALL candidate docs sharing a shingle —
-    a superset of the candidate pairs that the callers then semi-join away
-    — and costs two full exchanges of the candidate shingle stream (both
-    self-join sides), a per-pair groupBy, a separate sizes aggregation and
-    two join-backs. Driving verification from the pair table computes one
+    a superset of the candidate pairs that the caller then semi-joins away
+    — with a per-pair groupBy, a separate sizes aggregation and two
+    join-backs. Driving verification from the pair table computes one
     ``|A∩B|`` per candidate pair: one groupBy of the candidate shingle
     stream into per-doc arrays, two equi-joins to attach them, and a
     codegen'd ``array_intersect`` per pair. The candidate generators emit
@@ -186,11 +202,12 @@ def _pair_jaccard(
     cap), so ``size(array_intersect)`` equals the self-join's match count
     and ``J = |∩| / (|A|+|B|-|∩|)`` is the identical double.
 
-    Scale shape: the heavy stream crosses the network once (the array
-    groupBy) instead of twice, pair cost tracks the CANDIDATE count (not
-    the co-shingle superset), and per-doc arrays are bounded by document
-    length — the occupancy/df guards upstream keep per-doc pair fan-out
-    bounded exactly as before.
+    Scale shape: pair cost tracks the CANDIDATE count (not the co-shingle
+    superset), and per-doc arrays are bounded by document length — the
+    occupancy/df guards upstream keep per-doc pair fan-out bounded exactly
+    as before. Which form is faster depends on the path: the three MinHash
+    paths verify here, the prefix path (whose candidates are dense among
+    its candidate docs) with the shingle join.
 
     ``right_shingles`` gives the right side its own shingle table (the
     vs-index probe: index postings on the right, the batch on the left).
@@ -240,16 +257,16 @@ def ngram_jaccard_pairs(
 ) -> DataFrame:
     """Exact 3-word-shingle Jaccard near-duplicate pairs (the small-scale
     baseline the approximate methods are verified against). Jaccard is over
-    the df-capped shingle space (see :data:`DEFAULT_MAX_SHINGLE_DF`)."""
-    # Persist the RAW shingles first: the df-cap plan consumes them twice
-    # (hot-list aggregation + anti-join probe side), and the shingling
-    # explode+distinct is the expensive part. The capped result is
-    # persisted too — it feeds the size aggregation and both sides of the
-    # intersection self-join. Tracked (ssg_etl_spark.cache): consumers call
-    # release_tracked() after the query is consumed.
-    raw = persist_tracked(word_shingles(documents))
-    capped = persist_tracked(_cap_shingle_df(raw, max_shingle_df))
-    return _shingle_jaccard(capped, threshold)
+    the df-capped shingle space (see :data:`DEFAULT_MAX_SHINGLE_DF`).
+
+    One plan, nothing cached: the shingle stream is exchanged once by
+    shingle for the df window, and the self-join and the per-doc sizes
+    read that exchange (see :func:`_shingle_jaccard`). Skew: a shingle
+    over the cap is counted in one window partition, linear in its df;
+    it never reaches the self-join."""
+    return _shingle_jaccard(
+        _cap_shingle_df(word_shingles(documents), max_shingle_df), threshold
+    )
 
 
 def ngram_jaccard_pairs_prefix(
@@ -275,23 +292,22 @@ def ngram_jaccard_pairs_prefix(
     candidates then computes true Jaccard over the full capped universe —
     identical semantics, shared oracle.
 
-    Scale shape: one extra df aggregation + one per-doc window (bounded by
-    document length) versus a candidate join whose cost tracks the number
-    of TRUE near-pairs, not the shingle-frequency distribution."""
-    from pyspark.sql.window import Window
+    Scale shape: the cap's df window (see :func:`_cap_shingle_df`) is
+    the global order, so ranking adds only per-doc windows (bounded by
+    document length); the candidate join's cost tracks the number of TRUE
+    near-pairs, not the shingle-frequency distribution. Verification is
+    the shingle-join form over the candidate docs' shingles, semi-joined
+    to the candidates."""
+    capped = persist_tracked(
+        _cap_shingle_df(word_shingles(documents), max_shingle_df)
+    )
 
-    raw = persist_tracked(word_shingles(documents))
-    capped = persist_tracked(_cap_shingle_df(raw, max_shingle_df))
-
-    # Document frequency via a window over the shingle partitioning (r13)
-    # instead of groupBy + join-back: the join form exchanged the capped
-    # stream twice by shingle (partial counts + probe side, ~4 MB each at
-    # sf0.1). One window partition holds at most max_shingle_df rows (the
-    # cap is exactly what bounds it), so the unordered count window is
-    # skew-safe by construction. Same _df values, one exchange, no join.
+    # Rank on the cap's `_df`: the df the cap already counted in its window
+    # over the shingle partitioning is the corpus df of every kept shingle,
+    # so no second df pass runs. That window sees every raw shingle, capped
+    # out or not: a capped-out shingle's rows meet in one window partition,
+    # linear in its df (the buffer spills), never quadratic.
     ranked = capped.withColumn(
-        "_df", F.count(F.lit(1)).over(Window.partitionBy("shingle"))
-    ).withColumn(
         "_rk",
         F.row_number().over(
             Window.partitionBy("doc_id").orderBy("_df", "shingle")
@@ -339,11 +355,16 @@ def ngram_jaccard_pairs_prefix(
         .union(candidates.select("doc_b"))
         .distinct()
     )
-    # Pair-driven verification (r14, _pair_jaccard): one consumer, so the
-    # candidate shingle stream needs no persist — it flows straight into
-    # the per-doc array groupBy.
-    cand_shingles = capped.join(cand_docs, "doc_id", "left_semi")
-    return _pair_jaccard(candidates, cand_shingles, threshold)
+    # Shingle-join verification over the candidate docs (measured against
+    # the pair-driven _pair_jaccard form on dedup_jaccard_prefix at sf0.1,
+    # local[3] on a 4-vCPU VM: 6.15 s vs 10.91 s, 5/5 pairs won). It pairs
+    # every two candidate docs that share a shingle, a superset of the
+    # candidates, so the semi-join keeps the candidates only. `_df` stays
+    # the corpus df, so its `>= 2` filter is still exact on this subset.
+    verified = _shingle_jaccard(
+        capped.join(cand_docs, "doc_id", "left_semi"), threshold
+    )
+    return verified.join(candidates, ["doc_a", "doc_b"], "left_semi")
 
 
 def minhash_lsh_pairs(
@@ -367,17 +388,17 @@ def minhash_lsh_pairs(
     operator on all but adversarial inputs (and false positives are
     eliminated by verification).
     """
-    # Shingling (split+explode+distinct, one shuffle) feeds three plan
-    # branches (signatures, candidate sizes, candidate self-join); persist
-    # so it computes once. MEMORY_AND_DISK + LRU eviction keeps this safe.
-    # The df cap is applied to the FULL corpus before anything else, so the
-    # signatures, the verification sizes, and the verification intersections
-    # all see the same capped shingle universe (candidate-subset df would
-    # drift from the exact operator's corpus-wide cap). Raw shingles are
-    # persisted separately: the cap plan reads them twice (hot-list agg +
-    # anti-join probe), and shingling is the expensive branch.
-    raw = persist_tracked(word_shingles(documents))
-    shingles = persist_tracked(_cap_shingle_df(raw, max_shingle_df))
+    # The capped shingles (the cap's one window exchange over the raw
+    # stream) feed two plan branches, the signatures and the verification
+    # arrays; persist so they compute once. MEMORY_AND_DISK + LRU eviction
+    # keeps this safe. The df cap is applied to the FULL corpus before
+    # anything else, so the signatures, the verification sizes, and the
+    # verification intersections all see the same capped shingle universe
+    # (candidate-subset df would drift from the exact operator's
+    # corpus-wide cap).
+    shingles = persist_tracked(
+        _cap_shingle_df(word_shingles(documents), max_shingle_df)
+    )
 
     # One row per doc × 64 longs — |docs|-sized, not |shingles|-sized.
     # Persisted because the occupancy-guarded SELF-join consumes the bucket
@@ -445,8 +466,9 @@ def minhash_lsh_pairs_incremental(
     union = base.select("doc_id", "text").unionByName(
         delta.select("doc_id", "text")
     )
-    raw = persist_tracked(word_shingles(union))
-    shingles = persist_tracked(_cap_shingle_df(raw, max_shingle_df))
+    shingles = persist_tracked(
+        _cap_shingle_df(word_shingles(union), max_shingle_df)
+    )
 
     sig = minhash_signature(shingles, "doc_id", "shingle", num_hashes)
     buckets = persist_tracked(
@@ -578,9 +600,8 @@ def minhash_lsh_pairs_vs_index(
     guard never re-aggregates the corpus postings per batch; with None
     the probe runs unguarded (the pre-r6 behavior).
     """
-    raw_delta = persist_tracked(word_shingles(delta))
     capped_delta = persist_tracked(
-        _cap_shingle_df(raw_delta, max_shingle_df).join(
+        _cap_shingle_df(word_shingles(delta), max_shingle_df).join(
             base_hot, "shingle", "left_anti"
         )
     )

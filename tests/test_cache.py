@@ -20,7 +20,7 @@ def test_release_tracked_returns_storage_to_baseline(spark, sf_dir):
     baseline = _n_persistent(spark)
     docs = load_table(spark, sf_dir, "documents")
 
-    # MinHash pins shingles (raw + capped), signatures, candidates.
+    # MinHash pins the capped shingles, signatures, buckets, candidates.
     dedup.minhash_lsh_pairs(docs, 0.5).count()
     assert cache.tracked_count() >= 4
     assert _n_persistent(spark) > baseline

@@ -151,3 +151,52 @@ def test_tokenizers_split_once_codegen(spark, sf_dir, op):
     assert generates, "no Generate in the plan"
     assert not lambdas, lambdas
     assert not splits, splits
+
+
+def _shingle_keyed(node) -> bool:
+    return node.outputPartitioning().toString().startswith("hashpartitioning(shingle#")
+
+
+@pytest.mark.parametrize(
+    "conf",
+    [{}, {"spark.sql.adaptive.enabled": "false", "spark.sql.autoBroadcastJoinThreshold": "-1"}],
+    ids=["default", "aqe_and_broadcast_off"],
+)
+def test_exact_jaccard_shuffles_the_shingle_stream_once(spark, sf_dir, conf):
+    """``ngram_jaccard_pairs`` caches nothing and exchanges its shingle
+    stream once: the df-cap window's shingle partitioning is the one
+    shingle-keyed shuffle, and the self-join and the sizes read it (every
+    other shingle-keyed exchange is a reuse). With AQE and broadcast off
+    the sort-merge self-join sits on the window with no exchange between."""
+    from ssg_etl_spark import cache
+    from ssg_etl_spark.operators import dedup
+    from ssg_etl_spark.sources.tables import load_table
+
+    old = {k: spark.conf.get(k) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        before = cache.tracked_count()
+        df = dedup.ngram_jaccard_pairs(load_table(spark, sf_dir, "documents"))
+        assert cache.tracked_count() == before
+        df.collect()
+        nodes = [node for node, _ in plan_nodes(df)]
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
+    names = [n.getClass().getSimpleName() for n in nodes]
+    assert "InMemoryTableScanExec" not in names
+    shuffles = [n for n, name in zip(nodes, names)
+                if name == "ShuffleExchangeExec" and _shingle_keyed(n)]
+    assert len(shuffles) == 1, [n.toString() for n in shuffles]
+    if not conf:
+        return
+    joins = [n for n, name in zip(nodes, names)
+             if name == "SortMergeJoinExec" and "shingle#" in n.leftKeys().toString()]
+    assert len(joins) == 1, names
+    for side in (joins[0].left(), joins[0].right()):
+        passed = []
+        while side.getClass().getSimpleName() not in ("ShuffleExchangeExec", "ReusedExchangeExec"):
+            passed.append(side.getClass().getSimpleName())
+            side = side.children().apply(0)
+        assert _shingle_keyed(side) and "WindowExec" in passed, (passed, side.toString())

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -664,6 +665,77 @@ def test_threshold_zero_emits_only_pairs_sharing_a_shingle(spark, texts):
         for r in probe:
             pair = (min(r.doc_new, r.doc_base), max(r.doc_new, r.doc_base))
             assert want.get(pair) == r.jaccard
+    finally:
+        release_tracked()
+
+
+def _py_capped_pairs(texts, cap, threshold):
+    """The df-capped exact-Jaccard contract in Python: distinct 3-word
+    shingles per document, shingles held by more than ``cap`` documents
+    dropped from every set, then the pairs sharing a kept shingle whose
+    Jaccard over the capped sets reaches ``threshold``."""
+    from collections import Counter
+
+    sh = {i: _py_shingles(t) for i, t in enumerate(texts)}
+    if cap is not None:
+        df = Counter(g for s in sh.values() for g in s)
+        sh = {i: {g for g in s if df[g] <= cap} for i, s in sh.items()}
+    out = {}
+    for a in sh:
+        for b in sh:
+            if a < b and sh[a] & sh[b]:
+                j = _py_jaccard(sh[a], sh[b])
+                if j >= threshold:
+                    out[(a, b)] = j
+    return out
+
+
+@pytest.mark.parametrize("cap", [None, 1, 2])
+@given(texts=_DOCS)
+@settings(
+    max_examples=3,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+def test_exact_jaccard_paths_match_the_capped_reference(spark, cap, texts):
+    """``ngram_jaccard_pairs`` and the prefix path return exactly the
+    cap-aware reference's pairs and Jaccard values, at thresholds 0, 0.5
+    and 1 (a cap of 1 drops every shared shingle, so there are no pairs)."""
+    from ssg_etl_spark.cache import release_tracked
+    from ssg_etl_spark.operators import dedup
+
+    docs = _docs_df(spark, texts)
+    try:
+        for threshold in (0.0, 0.5, 1.0):
+            want = _py_capped_pairs(texts, cap, threshold)
+            for op in (dedup.ngram_jaccard_pairs, dedup.ngram_jaccard_pairs_prefix):
+                got = {
+                    (r.doc_a, r.doc_b): r.jaccard
+                    for r in op(docs, threshold, max_shingle_df=cap).collect()
+                }
+                assert got == want, (op.__name__, threshold)
+    finally:
+        release_tracked()
+
+
+def test_exact_jaccard_all_identical_docs_capped_out(spark):
+    """Every document the same text and a cap below the document count:
+    every shingle is capped out, so both exact paths return no pairs
+    (and raise nothing); under the cap they return every pair at 1.0."""
+    from ssg_etl_spark.cache import release_tracked
+    from ssg_etl_spark.operators import dedup
+
+    docs = _docs_df(spark, ["a b c d e f"] * 4)
+    every_pair = {(a, b): 1.0 for a in range(4) for b in range(a + 1, 4)}
+    try:
+        for op in (dedup.ngram_jaccard_pairs, dedup.ngram_jaccard_pairs_prefix):
+            for threshold in (0.0, 1.0):
+                assert op(docs, threshold, max_shingle_df=3).collect() == []
+                got = {
+                    (r.doc_a, r.doc_b): r.jaccard
+                    for r in op(docs, threshold, max_shingle_df=4).collect()
+                }
+                assert got == every_pair
     finally:
         release_tracked()
 
